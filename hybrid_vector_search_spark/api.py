@@ -34,6 +34,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .functions.vector import norm, norm_value
 from .observability import get_logger, timed
 from .operators import bm25 as bm25_op
 from .operators import fusion as fusion_op
@@ -42,6 +43,17 @@ from .operators.knn import clamp_limit, knn
 
 MODES = {"vector", "hybrid", "fulltext"}
 COMPAT_MODES = {"native", "atlas"}
+# columns of the engine's vector norm index (see SearchEngine._build_norms)
+_NORM_ID, _NORM_KEY, _NORM = "__norm_id", "__norm_key", "__norm"
+
+
+def _id_key(id_col: Column) -> Column:
+    """The norm index's join key: a 64-bit hash of the id. On a long key
+    Spark broadcasts a compact hash map (about 1.5 MB per request for the
+    paper's 5.4k products); on a string key it broadcasts a byte map whose
+    first memory page alone is 16 MB."""
+    return F.xxhash64(id_col)
+
 
 # reference backend/api.py:210-214 names its two fusion sub-pipelines
 # searchOne (vector) / searchTwo (text); the frontend looks details up by
@@ -133,13 +145,13 @@ class SearchEngine:
         compat: str = "native",
         eager: bool = True,
     ):
-        """``eager=True`` (default, the serving trade): run the two warm-up
-        jobs at construction — persist the corpus-global text statistics and
-        read the corpus vector dimensionality — so a dim-mismatched corpus
-        fails at startup, not on the first query. ``eager=False`` defers
-        both to first use, for batch composition where an engine may be
-        constructed (e.g. per table in a catalog sweep) without ever serving
-        a query."""
+        """``eager=True`` (default, the serving trade): build the indexes at
+        construction — persist the corpus-global text statistics and the
+        per-row vector norms, check that ids are unique, and read the corpus
+        vector dimensionality — so a bad corpus fails at startup, not on the
+        first query. ``eager=False`` defers each of these to its first use,
+        for batch composition where an engine may be constructed (e.g. per
+        table in a catalog sweep) without ever serving a query."""
         if compat not in COMPAT_MODES:
             raise ValueError(f"compat must be one of {sorted(COMPAT_MODES)}, got {compat!r}")
         self.df = df
@@ -147,14 +159,17 @@ class SearchEngine:
         self.compat = compat
         self.embedder = embedder or HashingEmbedder()
         self._stats_cache = None
+        self._norm_corpus: DataFrame | None = None
         self._dim_cache: int | None = None
         self._dim_known = False
         if eager:
+            self._build_norms()
             self._build_stats()
             self._read_dim()
 
     def _build_stats(self):
         if self._stats_cache is None:
+            self._build_norms()  # BM25 needs unique ids; this checks them
             # "index build": corpus-global text statistics over the FULL
             # table, computed once and reused by every query (reference
             # indexes.py is likewise a separate build step; see SURVEY.md
@@ -163,6 +178,40 @@ class SearchEngine:
                 self.df, self.cfg.id_col, self.cfg.title_col
             ).persist()
         return self._stats_cache
+
+    def _build_norms(self) -> DataFrame:
+        """The corpus with each row's ``norm(embedding)`` in column ``_NORM``,
+        read from the persisted norm index through a broadcast join. The
+        DataFrame is a lazy plan built once and reused by every search."""
+        if self._norm_corpus is None:
+            # "vector index build": each row's norm(embedding), keyed by id,
+            # computed once so that a cosine search makes one pass per row
+            # (the dot product) instead of two. The duplicate-id check runs
+            # over it and materialises it in the same job.
+            id_col = F.col(self.cfg.id_col)
+            norms = self.df.select(
+                id_col.alias(_NORM_ID),
+                _id_key(id_col).alias(_NORM_KEY),
+                norm(F.col(self.cfg.emb_col)).alias(_NORM),
+            ).persist()
+            dups = norms.groupBy(_NORM_ID).count().where(F.col("count") > 1).limit(3).collect()
+            if dups:
+                norms.unpersist()
+                # BM25 groups postings by id and the norm join matches by id,
+                # so duplicates would mix documents' scores silently
+                raise ValueError(
+                    f"corpus ids must be unique: {self.cfg.id_col} repeats for "
+                    f"{[r[_NORM_ID] for r in dups]}"
+                )
+            self._norm_corpus = (
+                self.df.join(F.broadcast(norms), _id_key(id_col) == F.col(_NORM_KEY))
+                # a norm belongs to the row only if the ids match as well: where
+                # two ids' hashes collide, the mismatched pairs get a NULL norm,
+                # and knn drops them
+                .withColumn(_NORM, F.when(id_col == F.col(_NORM_ID), F.col(_NORM)))
+                .drop(_NORM_ID, _NORM_KEY)
+            )
+        return self._norm_corpus
 
     def _read_dim(self) -> int | None:
         if not self._dim_known:
@@ -289,10 +338,17 @@ class SearchEngine:
             cols.append(self.cfg.restaurant_col)
         return cols
 
-    def _vector(self, description: str, limit: int, pre_filter: Column | None) -> DataFrame:
+    def _knn(self, description: str, limit: int, pre_filter: Column | None) -> DataFrame:
+        """Exact top-``limit`` corpus rows for the embedded description.
+        Cosine reads each row's norm from the norm index."""
         qv = query_vector(description, embedder=self.embedder)
-        out = knn(
-            self.df,
+        corpus, norm_col = self.df, None
+        if self.cfg.metric == "cosine":
+            if norm_value(qv) == 0.0:
+                raise ApiError(400, "La descripción no contiene términos con los que buscar.")
+            corpus, norm_col = self._build_norms(), _NORM
+        return knn(
+            corpus,
             qv,
             limit,
             vector_col=self.cfg.emb_col,
@@ -300,8 +356,11 @@ class SearchEngine:
             metric=self.cfg.metric,
             pre_filter=pre_filter,
             expected_dim=self._dim,
+            norm_col=norm_col,
         )
-        return out.select(*self._project_cols(), "score")
+
+    def _vector(self, description: str, limit: int, pre_filter: Column | None) -> DataFrame:
+        return self._knn(description, limit, pre_filter).select(*self._project_cols(), "score")
 
     def _fulltext(self, title_value: str, limit: int, *, residual: Column | None) -> DataFrame:
         out = bm25_op.fulltext(
@@ -319,17 +378,10 @@ class SearchEngine:
         self, description: str, title_value: str, limit: int, pre_filter: Column | None
     ) -> DataFrame:
         id_col = self.cfg.id_col
-        qv = query_vector(description, embedder=self.embedder)
-        vec_branch = knn(
-            self.df,
-            qv,
-            limit,
-            vector_col=self.cfg.emb_col,
-            id_col=id_col,
-            metric=self.cfg.metric,
-            pre_filter=pre_filter,  # vector branch only (api.py:178-180)
-            expected_dim=self._dim,
-        ).select(F.col(id_col).alias("id"), "score")
+        # pre-filter on the vector branch only (api.py:178-180)
+        vec_branch = self._knn(description, limit, pre_filter).select(
+            F.col(id_col).alias("id"), "score"
+        )
         txt_branch = bm25_op.bm25_scores(self._stats, bm25_op._py_tokens(title_value))
         fused = fusion_op.score_fusion(
             {"vector": vec_branch, "text": txt_branch},

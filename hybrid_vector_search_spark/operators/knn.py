@@ -15,8 +15,14 @@ Physical plan notes (what Catalyst produces and why it scales):
 - ``orderBy(...).limit(k)`` → ``TakeOrderedAndProject``: per-partition top-k
   heaps + single driver merge of k·num_partitions rows. No global sort, no
   shuffle of the corpus — this is the property that survives a 100× scale-up.
-- The whole score pipeline is one WholeStageCodegen span (zip_with/aggregate
-  are codegen'd); nothing crosses into Python.
+- The score is an interpreted projection: higher-order functions
+  (zip_with/aggregate) fall back from whole-stage codegen, so each lambda
+  runs once per vector element. Nothing crosses into Python. Per row, a
+  cosine score makes one dot-product pass, plus one norm pass unless
+  ``norm_col`` supplies the row's norm; the query's norm is a driver-side
+  literal (functions.vector).
+- Cosine is undefined for a zero vector: zero-norm rows are never returned,
+  and a zero query vector raises ``ValueError``.
 
 For 100 TB: the exact path is a full scan — bounded by scan bandwidth, which
 Spark parallelizes linearly. When sub-scan latency is needed, layer
@@ -32,7 +38,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import atlas_score
+from ..functions.vector import atlas_score, norm, norm_value
 
 DEFAULT_LIMIT = 5
 MAX_LIMIT = 25
@@ -90,6 +96,7 @@ def knn(
     clamp: bool = True,
     kernel: str = "expr",
     expected_dim: int | None = None,
+    norm_col: str | None = None,
 ) -> DataFrame:
     """Exact top-k nearest rows to ``query_vector``.
 
@@ -99,9 +106,14 @@ def knn(
     semantics, which is *stronger* than post-filtering (always k results when
     k matches exist).
 
-    ``kernel="expr"`` scores with codegen'd higher-order functions (no Python
+    ``kernel="expr"`` scores with JVM higher-order functions (no Python
     anywhere); ``kernel="numpy"`` swaps in the Arrow-batched BLAS kernel —
     same scores, faster for wide vectors / large scans.
+
+    Cosine only: ``norm_col`` names a column of ``df`` holding each row's
+    precomputed ``norm(vector_col)``, which saves one pass over every vector;
+    it is dropped from the output. Rows whose norm is 0 (or NULL) are never
+    returned, and a zero query vector raises ``ValueError``.
     """
     if clamp:
         k = clamp_limit(k)
@@ -117,15 +129,24 @@ def knn(
         )
     if pre_filter is not None:
         df = df.where(pre_filter)
+    row_norm = None
+    if metric == "cosine":
+        if not isinstance(query_vector, Column) and norm_value(query_vector) == 0.0:
+            raise ValueError("query vector is all zeros: cosine similarity is undefined")
+        if norm_col is None:
+            norm_col = "__knn_norm"
+            df = df.withColumn(norm_col, norm(F.col(vector_col)))
+        row_norm = F.col(norm_col)
+        df = df.where(row_norm > 0)
     if kernel == "numpy":
         if isinstance(query_vector, Column):
             raise ValueError("numpy kernel needs a literal query vector")
         score = knn_scores_numpy(query_vector, metric, round_dp)(F.col(vector_col))
     else:
-        score = atlas_score(F.col(vector_col), query_vector, metric)
+        score = atlas_score(F.col(vector_col), query_vector, metric, row_norm)
         if round_dp is not None:
             score = F.round(score, round_dp)
-    out_cols = [c for c in df.columns if c != vector_col]
+    out_cols = [c for c in df.columns if c not in (vector_col, norm_col)]
     return (
         df.withColumn(score_col, score)
         .select(*out_cols, score_col)

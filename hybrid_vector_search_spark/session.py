@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 48g: a heap the host can hold (the
+    kernel OOM-kills a JVM whose heap outgrows RAM) that still leaves room
+    for the Python workers. ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(app_name: str = "hybrid_vector_search_spark") -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
@@ -34,7 +42,10 @@ def get_spark(app_name: str = "hybrid_vector_search_spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

@@ -230,6 +230,76 @@ def test_dim_mismatch_fails_loudly(engine, spark):
         knn(emb, [0.1] * 32, 3, expected_dim=64)
 
 
+def test_zero_query_vector_is_400(engine):
+    """A description with no tokens embeds to the zero vector, for which
+    cosine is undefined: a 400, not an error from inside a Spark job."""
+    from hybrid_vector_search_spark.api import ApiError
+
+    for mode in ("vector", "hybrid"):
+        with pytest.raises(ApiError) as e:
+            engine.search({"mode": mode, "description": "!!!", "title": "spark"})
+        assert e.value.status == 400
+
+
+def _tiny_corpus(spark, rows):
+    from hybrid_vector_search_spark.operators.embed import HashingEmbedder, embed_documents
+
+    embedder = HashingEmbedder(16)
+    df = spark.createDataFrame(rows, "_id long, title string, description string")
+    return embed_documents(df, "description", "emb_description", embedder=embedder), embedder
+
+
+def test_zero_norm_corpus_rows_never_returned(spark):
+    from hybrid_vector_search_spark.api import SearchConfig, SearchEngine
+
+    corpus, embedder = _tiny_corpus(
+        spark, [(1, "red apple", "red apple"), (2, "blank", ""), (3, "green pear", "green pear")]
+    )
+    eng = SearchEngine(corpus, SearchConfig(), embedder=embedder)
+    res = eng.search({"mode": "vector", "description": "red apple", "limit": 25})
+    assert [r["_id"] for r in res["results"]] == ["1", "3"]
+    hy = eng.search({"mode": "hybrid", "description": "red apple", "title": "blank", "limit": 25})
+    blank = [r for r in hy["results"] if r["_id"] == "2"]
+    assert blank and blank[0]["score_details"]["vector"]["raw"] is None
+
+
+def test_norm_index_key_collisions_keep_each_rows_norm(spark, monkeypatch):
+    """The norm index joins on a hash of the id; rows whose hashes collide
+    must still be scored with their own norm."""
+    from hybrid_vector_search_spark import api
+
+    class Fixed:  # a query embedding that is the same for every text
+        def embed_one(self, text):
+            return [0.6, 0.8]
+
+    corpus = spark.createDataFrame(
+        [(1, "a", [3.0, 0.0]), (2, "b", [0.0, 0.5]), (3, "c", [1.0, 2.0])],
+        "_id long, title string, emb_description array<float>",
+    )
+    payload = {"mode": "vector", "description": "anything", "limit": 25}
+    expected = api.SearchEngine(corpus, api.SearchConfig(), embedder=Fixed()).search(payload)
+    assert [r["score"] for r in expected["results"]] == [0.991935, 0.9, 0.8]
+    monkeypatch.setattr(api, "_id_key", lambda c: F.lit(0).cast("long"))
+    collided = api.SearchEngine(corpus, api.SearchConfig(), embedder=Fixed()).search(payload)
+    assert collided == expected
+
+
+def test_duplicate_ids_rejected_at_build(spark):
+    """Duplicate ids mix documents' BM25 postings and norms, so the engine
+    refuses them: at construction when eager, at first use when lazy."""
+    from hybrid_vector_search_spark.api import SearchConfig, SearchEngine
+
+    corpus, embedder = _tiny_corpus(
+        spark, [(1, "red apple", "red apple"), (1, "green pear", "green pear")]
+    )
+    with pytest.raises(ValueError, match="unique"):
+        SearchEngine(corpus, SearchConfig(), embedder=embedder)
+    for payload in ({"mode": "fulltext", "title": "red pear"}, {"description": "red pear"}):
+        lazy = SearchEngine(corpus, SearchConfig(), embedder=embedder, eager=False)
+        with pytest.raises(ValueError, match="unique"):
+            lazy.search(payload)
+
+
 # ------------------------------------------------------------ HTTP binding
 
 
@@ -340,3 +410,15 @@ def test_lazy_engine_runs_no_jobs_at_construction(spark):
     assert after == before, "lazy construction ran a Spark job"
     # first use still works and the dim check still fires
     assert eng._dim == 2
+
+    # a lazy engine's first search builds its indexes and answers exactly
+    # as an eagerly built one
+    corpus, embedder = _tiny_corpus(
+        spark, [(1, "red apple", "red apple"), (2, "green pear", "green pear"),
+                (3, "red pear", "ripe red pear")]
+    )
+    lazy = SearchEngine(corpus, SearchConfig(), embedder=embedder, eager=False)
+    payload = {"mode": "vector", "description": "red pear", "limit": 25}
+    first = lazy.search(payload)
+    assert first == SearchEngine(corpus, SearchConfig(), embedder=embedder).search(payload)
+    assert len(first["results"]) == 3

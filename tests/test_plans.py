@@ -32,6 +32,44 @@ def test_knn_prefilter_pushdown(spark):
     assert "PushedFilters: [IsNotNull(vec_id), GreaterThan(vec_id,100)]" in plan, plan
 
 
+def test_knn_query_norm_is_a_literal(spark):
+    """The query vector's norm is computed on the driver: no per-row
+    aggregate runs over the query literal."""
+    from hybrid_vector_search_spark.operators.knn import knn
+    from hybrid_vector_search_spark.sources import load_table
+
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    plan = _plan(knn(emb, [0.1] * 64, 5))
+    assert "zip_with(embedding" in plan and "aggregate([" not in plan, plan
+
+
+def test_engine_vector_plan_broadcasts_norm_index(spark):
+    """The engine's cosine search reads each row's norm from its norm index,
+    broadcast onto the corpus: no shuffle, one aggregate per row (the dot
+    product) and none over the query literal."""
+    import re
+
+    from hybrid_vector_search_spark.api import SearchConfig, SearchEngine
+    from hybrid_vector_search_spark.operators.embed import embed_documents
+    from hybrid_vector_search_spark.sources import load_table
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    eng = SearchEngine(
+        embed_documents(docs, "text", "emb"),
+        SearchConfig(id_col="doc_id", title_col="text", emb_col="emb", price_col="n_chars"),
+    )
+    for pre_filter in (None, F.col("n_chars") < 500):
+        plan = _plan(eng._vector("spark fast table", 5, pre_filter))
+        assert "BroadcastExchange" in plan, plan
+        shuffles = [ln for ln in plan.splitlines() if re.search(r"(?<!Broadcast)Exchange", ln)]
+        assert not shuffles, plan
+        assert "aggregate([" not in plan, plan
+        # keyed on the id hash alone: a compact long-keyed broadcast
+        assert re.search(r"BroadcastHashJoin \[xxhash64\([^]]*\)\], \[__norm_key#\d+L\]", plan), plan
+        score = next(ln for ln in plan.splitlines() if " AS score#" in ln)
+        assert score.count("aggregate(") == 1 and "__norm" in score, score
+
+
 def test_dimension_joins_broadcast(spark):
     from hybrid_vector_search_spark.plans.relational import revenue_by_nation
 
