@@ -11,12 +11,16 @@ composes it into the driver's (spark, sf_dir) -> DataFrame shape.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+import uuid
 from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hybrid_vector_search_spark import artifacts
 from hybrid_vector_search_spark.operators import bm25 as bm25_op
 from hybrid_vector_search_spark.operators import fusion as fusion_op
 from hybrid_vector_search_spark.operators import knn as knn_op
@@ -159,8 +163,6 @@ LIMIT 25
 
 FT_QUERY = "spark fast table value"
 
-_TEXT_STATS_CACHE: dict[str, object] = {}
-
 
 def _text_stats(spark: SparkSession, sf_dir: str):
     """Per-sf_dir persisted BM25 index (TextStats.persist) shared by every
@@ -168,18 +170,13 @@ def _text_stats(spark: SparkSession, sf_dir: str):
     a separate step (reference indexes.py:73-86) and amortized across all
     queries; re-deriving corpus statistics inside each query would re-scan
     and re-tokenise the corpus 3× per request — the 100 TB anti-pattern the
-    bm25 module's own docstring warns about. Same one-sf_dir cache policy
-    as _LSH_CACHE: rotating scale factors releases the previous index."""
-    cached = _TEXT_STATS_CACHE.get(sf_dir)
-    if cached is None:
-        for stale_key in [k for k in _TEXT_STATS_CACHE if k != sf_dir]:
-            old = _TEXT_STATS_CACHE.pop(stale_key)
-            for part in (old.postings, old.doc_len, old.doc_freq, old.corpus):
-                part.unpersist()
-        docs = load_table(spark, sf_dir, "documents")
-        cached = bm25_op.build_text_stats(docs, "doc_id", "text").persist()
-        _TEXT_STATS_CACHE[sf_dir] = cached
-    return cached
+    bm25 module's own docstring warns about."""
+    return artifacts.get(
+        spark, "text_stats", sf_dir,
+        lambda: bm25_op.build_text_stats(
+            load_table(spark, sf_dir, "documents"), "doc_id", "text"
+        ).persist(),
+    )
 
 
 def q_fulltext_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -433,156 +430,62 @@ def q_events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_CACHE: dict[str, object] = {}
-_IVF_LAYOUT_CACHE: dict[str, object] = {}
-_TMPDIR: list[str] = []  # one session tempdir (IVF layouts, sink roundtrips), removed at exit
-
-
-def _session_tmpdir() -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    if not _TMPDIR:
-        d = tempfile.mkdtemp(prefix="hvs_session_")
-        _TMPDIR.append(d)
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return _TMPDIR[0]
-
-
 _ANN_EVAL_K = 10
 _ANN_EVAL_NQ = 5  # query vectors = vec_id 0..4
-_ANN_EMB_CACHE: dict[str, DataFrame] = {}
-_ANN_EXACT_CACHE: dict[str, DataFrame] = {}
-# Prepared-statement reuse for the three recall reports: the report PLAN is
-# built once per (family, sf_dir) and the lazy DataFrame reused — every
-# collect re-executes against the data, only the driver-side analysis is
-# amortized. Measured at sf0.1: executing a prepared report costs ~0.05s
-# while analyzing a fresh copy of the same plan costs ~1s (join + HOF score
-# + Arrow top-k + window + report aggregate), i.e. the per-call cost was 95%
-# plan analysis for a byte-identical plan. A serving system prepares a
-# parameterized search plan once per deployment for exactly this reason.
-_ANN_REPORT_CACHE: dict[tuple[str, str], DataFrame] = {}
 
-# Shared exact pass for the orders-profile pair (r7, the ANN-trio recipe
-# applied to profiling): the count-distinct Expand + min/max aggregates are
-# the expensive side of BOTH orders_profile and its self-attesting HLL twin.
-# Computed once per sf_dir, persisted (it is ONE row), and unpivoted /
-# attested from by both queries — the Expand scan never runs twice per
-# table. Cache-miss still builds the self-contained plan.
-_PROFILE_AGG_CACHE: dict[str, DataFrame] = {}
-# Prepared-plan reuse for the two unpivoted reports (the _ANN_REPORT_CACHE
-# rationale): the report plan is analyzed once per sf_dir and the lazy
-# DataFrame reused — every collect re-executes against the data.
-_PROFILE_REPORT_CACHE: dict[tuple[str, str], DataFrame] = {}
+
+def _cache_now(df: DataFrame) -> DataFrame:
+    """``.cache()`` and fill the cache now, so the build pays the scan once."""
+    df = df.cache()
+    df.count()
+    return df
 
 
 def _orders_exact_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = _PROFILE_AGG_CACHE.get(sf_dir)
-    if agg is None:
-        for stale_key in [k for k in _PROFILE_AGG_CACHE if k != sf_dir]:
-            _PROFILE_AGG_CACHE.pop(stale_key).unpersist()
-        for stale_key in [k for k in _PROFILE_REPORT_CACHE if k[1] != sf_dir]:
-            _PROFILE_REPORT_CACHE.pop(stale_key)
-        agg = relational.orders_profile_aggregates(spark, sf_dir).cache()
-        agg.count()
-        _PROFILE_AGG_CACHE[sf_dir] = agg
-    return agg
+    """Shared exact pass for the orders-profile pair (r7, the ANN-trio recipe
+    applied to profiling): the count-distinct Expand + min/max aggregates are
+    the expensive side of BOTH orders_profile and its self-attesting HLL
+    twin. Computed once per sf_dir, persisted (it is ONE row), and unpivoted /
+    attested from by both queries — the Expand scan never runs twice per
+    table."""
+    return artifacts.get(
+        spark, "profile_agg", sf_dir,
+        lambda: _cache_now(relational.orders_profile_aggregates(spark, sf_dir)),
+    )
 
 
-def _materialize_report(spark: SparkSession, key: tuple, df: DataFrame) -> DataFrame:
-    """Write a small cached report to parquet once and serve reads from the
-    file: a .cache()'d plan's blocks (and its localCheckpoint inputs) can be
-    EVICTED under late-bench memory pressure, silently turning a 0.5 s
-    cached collect back into the 4 s build (observed for
-    orders_profile_approx in the r8 bench); a parquet-backed report is
-    eviction-immune — collect == file read."""
-    path = f"{_session_tmpdir()}/report/{key[0]}_{key[1].strip('/').replace('/', '_')}"
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
-# Materialize-once memo for the multi-second DRIVER-SIDE builders (r8
-# verdict ask #6): streaming folds (source staging + checkpointed
-# micro-batches) and iterative graph fixpoints (localCheckpoint per round)
-# do their expensive work during DataFrame *construction*, before any
-# caller-visible job — per-call cost that a real deployment pays once per
-# dataset, not per read. The FIRST call per (query, sf_dir) runs the full
-# self-contained computation (what the driver's one-shot correctness check
-# and the bench's first run observe); repeats serve the parquet-backed
-# result (_materialize_report — eviction-immune, unlike .cache()). This is
-# memoization of one query's own output, NOT cross-query sharing: each
-# memoized query still computes its own closure/fold/fixpoint, so its
-# oracle stays independently replayable (the components_materialized
-# *_shared twins are the cross-query sharing design, unchanged).
-_REPORT_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
-def _memo(
-    name: str, fn: Callable[[SparkSession, str], DataFrame]
-) -> Callable[[SparkSession, str], DataFrame]:
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        rep = _REPORT_MEMO.get((name, sf_dir))
-        if rep is None:
-            for stale in [k for k in _REPORT_MEMO if k[1] != sf_dir]:
-                _REPORT_MEMO.pop(stale)
-            rep = _materialize_report(spark, (f"memo_{name}", sf_dir), fn(spark, sf_dir))
-            _REPORT_MEMO[(name, sf_dir)] = rep
-        return rep
-
-    wrapped.__name__ = f"memo_{name}"
-    wrapped.__wrapped__ = fn  # tests and introspection reach the raw builder
-    return wrapped
-
-
+@artifacts.prepared("profile_exact")
 def q_orders_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    report = _PROFILE_REPORT_CACHE.get(("exact", sf_dir))
-    if report is None:
-        report = _materialize_report(
-            spark,
-            ("exact", sf_dir),
-            relational.orders_profile(
-                spark, sf_dir, exact_agg=_orders_exact_agg(spark, sf_dir)
-            ),
-        )
-        _PROFILE_REPORT_CACHE[("exact", sf_dir)] = report
-    return report
+    return artifacts.materialize(
+        spark, "profile_exact", sf_dir,
+        relational.orders_profile(
+            spark, sf_dir, exact_agg=_orders_exact_agg(spark, sf_dir)
+        ),
+    )
 
 
+@artifacts.prepared("profile_attest")
 def q_orders_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    report = _PROFILE_REPORT_CACHE.get(("attest", sf_dir))
-    if report is None:
-        report = _materialize_report(
-            spark,
-            ("attest", sf_dir),
-            relational.orders_profile_approx(
-                spark, sf_dir, exact_agg=_orders_exact_agg(spark, sf_dir)
-            ),
-        )
-        _PROFILE_REPORT_CACHE[("attest", sf_dir)] = report
-    return report
+    return artifacts.materialize(
+        spark, "profile_attest", sf_dir,
+        relational.orders_profile_approx(
+            spark, sf_dir, exact_agg=_orders_exact_agg(spark, sf_dir)
+        ),
+    )
 
 
 def _ann_eval_queries(spark: SparkSession, sf_dir: str):
     """(corpus, queries_df, [(qid, vector), ...]) for the self-attesting ANN
-    rows. The corpus is cached per sf_dir — all three ANN families probe the
-    SAME relation, so serving them from one in-memory copy replaces 5 probe
-    scans × 3 families with one materialization (same one-sf_dir policy as
-    _LSH_CACHE). The per-query approximate searches take literal vectors
-    (they prune partitions/buckets from the query point), so the 5 query
-    rows are collected driver-side — the serving pattern, not a data-path
-    collect."""
-    emb = _ANN_EMB_CACHE.get(sf_dir)
-    if emb is None:
-        for stale_key in [k for k in _ANN_EMB_CACHE if k != sf_dir]:
-            _ANN_EMB_CACHE.pop(stale_key).unpersist()
-        for stale_key in [k for k in _ANN_EXACT_CACHE if k[0] != sf_dir]:
-            _ANN_EXACT_CACHE.pop(stale_key).unpersist()
-        for stale_key in [k for k in _ANN_REPORT_CACHE if k[1] != sf_dir]:
-            _ANN_REPORT_CACHE.pop(stale_key)
-        emb = load_table(spark, sf_dir, "embeddings").cache()
-        emb.count()
-        _ANN_EMB_CACHE[sf_dir] = emb
+    rows. The corpus is a cached artifact — all ANN families probe the SAME
+    relation, so serving them from one in-memory copy replaces 5 probe
+    scans × each family with one materialization. The per-query approximate
+    searches take literal vectors (they prune partitions/buckets from the
+    query point), so the 5 query rows are collected driver-side — the
+    serving pattern, not a data-path collect."""
+    emb = artifacts.get(
+        spark, "ann_corpus", sf_dir,
+        lambda: _cache_now(load_table(spark, sf_dir, "embeddings")),
+    )
     qdf = emb.where(F.col("vec_id") < _ANN_EVAL_NQ).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -591,32 +494,37 @@ def _ann_eval_queries(spark: SparkSession, sf_dir: str):
 
 
 def _ann_recall_report(
-    sf_dir, emb, qdf, approx, *, floor: float, mean_floor: float,
+    spark, sf_dir, emb, qdf, approx, *, floor: float, mean_floor: float,
     metric: str = "cosine",
 ) -> DataFrame:
     """Exact side = bulk knn_join (broadcast queries, partition-local top-k),
-    computed ONCE per sf_dir and cached — it is the identical ground truth
-    for all three ANN families, queries×k rows. Approx side = the batch
-    probed search under test (one plan for the whole query set — r7, was a
-    union of per-query plans whose per-plan analysis dominated wall time);
-    recall computed in-plan (operators/ann_eval.py). ``floor`` is the loose
-    per-query sanity bound, ``mean_floor`` the tight whole-report contract —
-    calibrated with margin below the recalls measured at sf0.001/sf0.01 so
-    testdata regeneration noise doesn't flake the gate while a real recall
-    regression still hash-fails it."""
+    computed ONCE per sf_dir and metric and cached — it is the identical
+    ground truth for every ANN family, queries×k rows. Approx side = the
+    batch probed search under test (one plan for the whole query set — r7,
+    was a union of per-query plans whose per-plan analysis dominated wall
+    time); recall computed in-plan (operators/ann_eval.py). ``floor`` is the
+    loose per-query sanity bound, ``mean_floor`` the tight whole-report
+    contract — calibrated with margin below the recalls measured at
+    sf0.001/sf0.01 so testdata regeneration noise doesn't flake the gate
+    while a real recall regression still hash-fails it."""
     from hybrid_vector_search_spark.operators import ann_eval
-    from hybrid_vector_search_spark.operators import knn as knn_op
 
-    exact = _ANN_EXACT_CACHE.get((sf_dir, metric))
-    if exact is None:
-        exact = knn_op.knn_join(qdf, emb, k=_ANN_EVAL_K, metric=metric).cache()
-        exact.count()
-        _ANN_EXACT_CACHE[(sf_dir, metric)] = exact
+    exact = artifacts.get(
+        spark, f"ann_exact_{metric}", sf_dir,
+        lambda: _cache_now(knn_op.knn_join(qdf, emb, k=_ANN_EVAL_K, metric=metric)),
+    )
     return ann_eval.recall_report(
         exact, approx, k=_ANN_EVAL_K, floor=floor, mean_floor=mean_floor
     )
 
 
+def _with_layout(spark: SparkSession, index):
+    """(index, its clustered parquet layout cached in memory): probes then
+    read in-memory batches pruned by the cluster IN-filter, not 5 re-opens."""
+    return index, _cache_now(spark.read.parquet(index.path))
+
+
+@artifacts.prepared("ann_report_ivf")
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-attesting IVF ANN (nprobe=4 of 8): per query vector, the exact
     top-k facts (oracle-verified value-for-value) plus the in-plan claims
@@ -631,36 +539,23 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from hybrid_vector_search_spark.operators import ivf as ivf_op
 
-    cached_report = _ANN_REPORT_CACHE.get(("ivf", sf_dir))
-    if cached_report is not None:
-        return cached_report
     emb, qdf, qvecs = _ann_eval_queries(spark, sf_dir)
-    index = _IVF_CACHE.get(sf_dir)
-    if index is None:
-        # all IVF layouts live under ONE session tempdir (removed atexit) —
-        # repeated driver runs no longer strand hvs_ivf_* dirs in /tmp
-        safe = sf_dir.strip("/").replace("/", "_")
-        path = f"{_session_tmpdir()}/ivf/{safe}/index"
-        index = ivf_op.build_ivf(spark, emb, path, n_clusters=8)
-        # cache the clustered layout alongside: 5 probes/query-set then read
-        # in-memory batches pruned by the cluster IN-filter, not 5 re-opens
-        _IVF_CACHE[sf_dir] = index
-        layout = spark.read.parquet(index.path).cache()
-        layout.count()
-        _IVF_LAYOUT_CACHE[sf_dir] = layout
-    layout = _IVF_LAYOUT_CACHE[sf_dir]
+    index, layout = artifacts.get(
+        spark, "ivf", sf_dir,
+        lambda: _with_layout(spark, ivf_op.build_ivf(
+            spark, emb, f"{artifacts.path('ivf', sf_dir)}/index", n_clusters=8
+        )),
+    )
     approx = ivf_op.ivf_search_batch(
         spark, index, qvecs, _ANN_EVAL_K, nprobe=4, layout=layout
     ).select("query_id", "vec_id")
     # measured recall at nprobe=4/8: per-query min 0.5, mean 0.78-0.86
-    report = _ann_recall_report(sf_dir, emb, qdf, approx, floor=0.3, mean_floor=0.6)
-    _ANN_REPORT_CACHE[("ivf", sf_dir)] = report
-    return report
+    return _ann_recall_report(
+        spark, sf_dir, emb, qdf, approx, floor=0.3, mean_floor=0.6
+    )
 
 
-_LSH_CACHE: dict[str, object] = {}
-
-
+@artifacts.prepared("ann_report_lsh")
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-attesting LSH ANN (8 bits, Hamming<=3 multi-probe, exact cosine
     rerank): per query vector, the exact top-k facts (oracle-verified) plus
@@ -672,42 +567,27 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from hybrid_vector_search_spark.operators import lsh_ann
 
-    cached_report = _ANN_REPORT_CACHE.get(("lsh", sf_dir))
-    if cached_report is not None:
-        return cached_report
     emb, qdf, qvecs = _ann_eval_queries(spark, sf_dir)
-    cached = _LSH_CACHE.get(sf_dir)
-    if cached is None:
-        # bound the cache to ONE sf_dir: rotating to a new scale factor
-        # releases the previous bucketed corpus instead of accreting cached
-        # copies in executor memory for the life of the session
-        for stale_key in [k for k in _LSH_CACHE if k != sf_dir]:
-            _, stale_df = _LSH_CACHE.pop(stale_key)
-            stale_df.unpersist()
+
+    def build():
         dim = len(emb.select("embedding").head().embedding)
         index = lsh_ann.LSHIndex(
             bits=8, seed=7, dim=dim, id_col="vec_id", vector_col="embedding"
         )
-        bucketed = lsh_ann.with_buckets(emb, index).cache()
-        bucketed.count()
-        cached = (index, bucketed)
-        _LSH_CACHE[sf_dir] = cached
-    index, bucketed = cached
+        return index, _cache_now(lsh_ann.with_buckets(emb, index))
+
+    index, bucketed = artifacts.get(spark, "lsh", sf_dir, build)
     approx = lsh_ann.lsh_search_batch(
         bucketed, index, qvecs, _ANN_EVAL_K, probe_hamming=3
     ).select("query_id", "vec_id")
     # measured recall at bits=8, Hamming<=3 (~36% scan): per-query min 0.3,
     # mean 0.5-0.72 — hyperplane LSH is honestly the weakest probe here
-    report = _ann_recall_report(sf_dir, emb, qdf, approx, floor=0.1, mean_floor=0.3)
-    _ANN_REPORT_CACHE[("lsh", sf_dir)] = report
-    return report
+    return _ann_recall_report(
+        spark, sf_dir, emb, qdf, approx, floor=0.1, mean_floor=0.3
+    )
 
 
-_PQ_CACHE: dict[str, object] = {}
-_IVFPQ_CACHE: dict[str, object] = {}
-_IVFPQ_LAYOUT_CACHE: dict[str, DataFrame] = {}
-
-
+@artifacts.prepared("ann_report_ivfpq")
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-attesting IVF-PQ ANN (operators/ivfpq.py) — the composed index
     FAISS calls IndexIVFPQ: nprobe=4 of 8 coarse clusters prune the scan to
@@ -724,38 +604,24 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual < raw quantization error) are pinned in tests/test_ivfpq.py."""
     from hybrid_vector_search_spark.operators import ivfpq as ivfpq_op
 
-    cached_report = _ANN_REPORT_CACHE.get(("ivfpq", sf_dir))
-    if cached_report is not None:
-        return cached_report
     emb, qdf, qvecs = _ann_eval_queries(spark, sf_dir)
-    index = _IVFPQ_CACHE.get(sf_dir)
-    if index is None:
-        # cache keys: sf_dir (cosine) or ("euc", sf_dir); evict other-sf only
-        for stale_key in [
-            k for k in _IVFPQ_CACHE
-            if (k if isinstance(k, str) else k[-1]) != sf_dir
-        ]:
-            _IVFPQ_CACHE.pop(stale_key)
-            _IVFPQ_LAYOUT_CACHE.pop(stale_key).unpersist()
-        safe = sf_dir.strip("/").replace("/", "_")
-        path = f"{_session_tmpdir()}/ivfpq/{safe}/index"
-        index = ivfpq_op.build_ivfpq(
-            spark, emb, path, n_clusters=8, n_subspaces=8, ksub=32, seed=42
-        )
-        _IVFPQ_CACHE[sf_dir] = index
-        layout = spark.read.parquet(index.path).cache()
-        layout.count()
-        _IVFPQ_LAYOUT_CACHE[sf_dir] = layout
-    layout = _IVFPQ_LAYOUT_CACHE[sf_dir]
+    index, layout = artifacts.get(
+        spark, "ivfpq", sf_dir,
+        lambda: _with_layout(spark, ivfpq_op.build_ivfpq(
+            spark, emb, f"{artifacts.path('ivfpq', sf_dir)}/index",
+            n_clusters=8, n_subspaces=8, ksub=32, seed=42,
+        )),
+    )
     approx = ivfpq_op.ivfpq_search_batch(
         spark, index, qvecs, _ANN_EVAL_K,
         nprobe=4, rerank=emb, rerank_factor=8, layout=layout,
     ).select("query_id", F.col("id").alias("vec_id"))
-    report = _ann_recall_report(sf_dir, emb, qdf, approx, floor=0.2, mean_floor=0.5)
-    _ANN_REPORT_CACHE[("ivfpq", sf_dir)] = report
-    return report
+    return _ann_recall_report(
+        spark, sf_dir, emb, qdf, approx, floor=0.2, mean_floor=0.5
+    )
 
 
+@artifacts.prepared("ann_report_ivfpq_euc")
 def q_ann_ivfpq_euclid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The euclidean twin of ann_ivfpq_topk (r8): the same composed IVF-PQ
     index served through the euclidean ADC path — per-(query, cluster)
@@ -767,41 +633,195 @@ def q_ann_ivfpq_euclid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly like the other four ANN attestation rows."""
     from hybrid_vector_search_spark.operators import ivfpq as ivfpq_op
 
-    cached_report = _ANN_REPORT_CACHE.get(("ivfpq_euc", sf_dir))
-    if cached_report is not None:
-        return cached_report
     emb, qdf, qvecs = _ann_eval_queries(spark, sf_dir)
-    index = _IVFPQ_CACHE.get(("euc", sf_dir))
-    if index is None:
-        for stale_key in [
-            k for k in _IVFPQ_CACHE
-            if (k if isinstance(k, str) else k[-1]) != sf_dir
-        ]:
-            _IVFPQ_CACHE.pop(stale_key)
-            _IVFPQ_LAYOUT_CACHE.pop(stale_key).unpersist()
-        safe = sf_dir.strip("/").replace("/", "_")
-        path = f"{_session_tmpdir()}/ivfpq_euc/{safe}/index"
-        index = ivfpq_op.build_ivfpq(
-            spark, emb, path, n_clusters=8, n_subspaces=8, ksub=32,
-            metric="euclidean", seed=42,
-        )
-        _IVFPQ_CACHE[("euc", sf_dir)] = index
-        layout = spark.read.parquet(index.path).cache()
-        layout.count()
-        _IVFPQ_LAYOUT_CACHE[("euc", sf_dir)] = layout
-    layout = _IVFPQ_LAYOUT_CACHE[("euc", sf_dir)]
+    index, layout = artifacts.get(
+        spark, "ivfpq_euc", sf_dir,
+        lambda: _with_layout(spark, ivfpq_op.build_ivfpq(
+            spark, emb, f"{artifacts.path('ivfpq_euc', sf_dir)}/index",
+            n_clusters=8, n_subspaces=8, ksub=32, metric="euclidean", seed=42,
+        )),
+    )
     approx = ivfpq_op.ivfpq_search_batch(
         spark, index, qvecs, _ANN_EVAL_K,
         nprobe=4, rerank=emb, rerank_factor=8, layout=layout,
     ).select("query_id", F.col("id").alias("vec_id"))
-    report = _ann_recall_report(
-        sf_dir, emb, qdf, approx, floor=0.2, mean_floor=0.5, metric="euclidean"
+    return _ann_recall_report(
+        spark, sf_dir, emb, qdf, approx, floor=0.2, mean_floor=0.5,
+        metric="euclidean",
     )
-    _ANN_REPORT_CACHE[("ivfpq_euc", sf_dir)] = report
-    return report
 
 
-_STREAM_SRC_CACHE: dict[str, str] = {}
+@artifacts.prepared("ann_report_pq")
+def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Self-attesting compressed-domain ANN (operators/pq.py): vectors
+    stored as M=8 uint8 codes (32× smaller scan at dim 64), query served by
+    broadcast ADC tables + exact rerank of the top 8·k ADC candidates. Per
+    query vector, the exact top-k facts (oracle-verified) plus the in-plan
+    claims that ADC+rerank recovered >= 50% of each exact set with mean
+    recall >= 60% — the KMeans
+    codebook isn't SQL-expressible, the recall contract is
+    (operators/ann_eval.py; reference numCandidates dial,
+    backend/api.py:120). ADC-rerank recall floors and the rerank's
+    bit-equality to the float scoring path stay pinned in tests/test_pq.py."""
+    from hybrid_vector_search_spark.operators import pq as pq_op
+
+    emb, qdf, qvecs = _ann_eval_queries(spark, sf_dir)
+
+    def build():
+        cb = pq_op.train_pq(emb, "embedding", n_subspaces=8, ksub=32, seed=42)
+        return cb, _cache_now(
+            pq_op.encode_pq(emb, cb, id_col="vec_id", vector_col="embedding")
+        )
+
+    cb, enc = artifacts.get(spark, "pq", sf_dir, build)
+    approx = pq_op.pq_search_batch(
+        enc, cb, qvecs, _ANN_EVAL_K,
+        rerank=emb, rerank_factor=8, id_col="vec_id", vector_col="embedding",
+    ).select("query_id", F.col("id").alias("vec_id"))
+    # measured recall at rerank_factor=8: per-query min 0.7, mean 0.82-0.88
+    return _ann_recall_report(
+        spark, sf_dir, emb, qdf, approx, floor=0.5, mean_floor=0.6
+    )
+
+
+@artifacts.prepared("ann_report_sq8")
+def q_ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Self-attesting scalar-quantized ANN (operators/sq.py): every vector
+    stored as dim uint8 codes (4× smaller scan than float32, no training
+    sample, no seed — the bounds are exact corpus min/max per dimension),
+    queries served by asymmetric cosine against the decoded domain in one
+    vectorized Arrow kernel. Per query vector, the exact top-k facts
+    (oracle-verified value-for-value) plus the in-plan claims that SQ8
+    recovered >= 60% of each exact set with mean recall >= 80% — the
+    tightest floor of the four ANN families, because 8-bit affine
+    quantization barely moves cosine neighborhoods (the reason it is the
+    first compression step a 100 TB corpus takes). The packed BINARY codes
+    aren't SQL-expressible; the recall contract is (operators/ann_eval.py;
+    reference numCandidates dial, backend/api.py:120). Encode/decode
+    round-trip and recall floors stay pinned in tests/test_sq.py."""
+    from hybrid_vector_search_spark.operators import sq as sq_op
+
+    emb, qdf, qvecs = _ann_eval_queries(spark, sf_dir)
+
+    def build():
+        params = sq_op.train_sq(emb, "embedding")
+        return params, _cache_now(
+            sq_op.encode_sq(emb, params, id_col="vec_id", vector_col="embedding")
+        )
+
+    params, enc = artifacts.get(spark, "sq8", sf_dir, build)
+    approx = sq_op.sq_search_batch(enc, params, qvecs, _ANN_EVAL_K).select(
+        "query_id", "vec_id"
+    )
+    # measured recall: per-query min 0.8, mean 0.94-1.0 at sf0.001/sf0.01 —
+    # floors set with margin below
+    return _ann_recall_report(
+        spark, sf_dir, emb, qdf, approx, floor=0.6, mean_floor=0.8
+    )
+
+
+_GRAPH_K = 10
+# Working degree 2k and 4 rounds: the convergence point for the bundled
+# near-isotropic corpus (operators/nndescent.py docstring — build_k is the
+# lever that holds recall as n grows; measured graph recall@10 0.996 at
+# n=500 / 0.924 at n=2000 with these exact parameters, deterministic).
+_GRAPH_BUILD_K = 2 * _GRAPH_K
+_GRAPH_ITERS = 4
+
+
+def _graph_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The degree-``_GRAPH_BUILD_K`` NN-Descent graph for this sf_dir (the
+    persistent index artifact, HNSW's batch analog — localCheckpointed so
+    both declared queries and every beam hop reuse one materialization)."""
+    from hybrid_vector_search_spark.operators import nndescent
+
+    return artifacts.get(
+        spark, "graph", sf_dir,
+        lambda: nndescent.knn_graph_nndescent(
+            _ann_eval_queries(spark, sf_dir)[0],
+            k=_GRAPH_BUILD_K,
+            iterations=_GRAPH_ITERS,
+            seed=0,
+        ).localCheckpoint(eager=True),
+    )
+
+
+@artifacts.prepared("ann_report_graph")
+def q_knn_graph_nndescent(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Self-attesting NN-Descent k-NN graph (operators/nndescent.py) — the
+    batch analog of the HNSW index Atlas mongot builds for the reference's
+    `$vectorSearch` (reference indexes.py:55-71). Report shape = the
+    ann_ivf_topk attestation, but over EVERY corpus node (the graph's
+    contract is per-node): for each node, the exact top-10-excluding-self
+    facts (oracle-verified value-for-value — brute-force cosine is fully
+    SQL-expressible) plus the in-plan claims that the node's graph edges
+    recovered >= 30% of its exact neighbor set and the mean edge recall
+    over the whole corpus is >= 86%. xxhash64 bucket init isn't DuckDB-
+    replayable, so the graph itself is attested, not replayed — measured
+    mean recall@10 at build_k=2k, 4 rounds: 0.997 (sf0.001), 0.996
+    (sf0.01), 0.924 (sf0.1); per-node min 0.5-0.9. Floors pinned again in
+    tests/test_nndescent.py."""
+    from pyspark.sql import Window
+
+    from hybrid_vector_search_spark.operators import ann_eval
+    from hybrid_vector_search_spark.operators.nndescent import _top_k_per_src
+
+    emb, _, _ = _ann_eval_queries(spark, sf_dir)
+    graph = _graph_index(spark, sf_dir)
+
+    def build_exact() -> DataFrame:
+        # every node as a query, top-(k+1) bulk knn_join then drop self and
+        # re-rank — the true top-k-excluding-self whether or not a duplicate
+        # vector ties with self at 1.0
+        qall = emb.select(F.col("vec_id").alias("query_id"), "embedding")
+        w = Window.partitionBy("query_id").orderBy(
+            F.desc("score"), F.asc("vec_id")
+        )
+        return _cache_now(
+            knn_op.knn_join(qall, emb, k=_GRAPH_K + 1, metric="cosine")
+            .where(F.col("vec_id") != F.col("query_id"))
+            .withColumn("_rk", F.row_number().over(w))
+            .where(F.col("_rk") <= _GRAPH_K)
+            .drop("_rk")
+        )
+
+    exact = artifacts.get(spark, "graph_exact", sf_dir, build_exact)
+    approx = _top_k_per_src(graph, _GRAPH_K).select(
+        F.col("src").alias("query_id"), F.col("dst").alias("vec_id")
+    )
+    return ann_eval.recall_report(
+        exact, approx, k=_GRAPH_K, floor=0.3, mean_floor=0.86
+    )
+
+
+@artifacts.prepared("ann_report_graph_search")
+def q_knn_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Self-attesting batch beam search over the NN-Descent graph — the
+    query half of graph ANN (HNSW's search phase in batch form: the whole
+    query RELATION joins the edge list per hop instead of chasing pointers
+    per query; operators/nndescent.py knn_graph_search). Per query vector,
+    the exact top-k facts (oracle-verified value-for-value, the standard
+    5-query eval set) plus the in-plan claims that beam=20/hops=3 search
+    recovered >= 60% of each exact set with mean recall >= 94% — measured
+    1.0 / 1.0 / 0.98 at sf0.001 / sf0.01 / sf0.1 on the shared
+    build_k=2k graph; beam re-scores real neighborhoods with the true
+    query vector, so its recall sits above the graph's own edge recall.
+    Graph construction isn't DuckDB-replayable; the recall contract is
+    (operators/ann_eval.py; reference numCandidates dial,
+    backend/api.py:120). Floors pinned again in tests/test_nndescent.py."""
+    from hybrid_vector_search_spark.operators import nndescent
+
+    emb, qdf, _ = _ann_eval_queries(spark, sf_dir)
+    graph = _graph_index(spark, sf_dir)
+    approx = nndescent.knn_graph_search(
+        graph, emb, qdf, k=_ANN_EVAL_K, beam=20, hops=3, seed=0
+    ).select("query_id", "vec_id")
+    return _ann_recall_report(
+        spark, sf_dir, emb, qdf, approx, floor=0.6, mean_floor=0.94
+    )
+
+
+# ------------------------------------------------------- streaming (batch parity)
 
 
 @contextmanager
@@ -825,218 +845,86 @@ def _stream_shuffle(spark: SparkSession, n: int = 8):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self-attesting compressed-domain ANN (operators/pq.py): vectors
-    stored as M=8 uint8 codes (32× smaller scan at dim 64), query served by
-    broadcast ADC tables + exact rerank of the top 8·k ADC candidates. Per
-    query vector, the exact top-k facts (oracle-verified) plus the in-plan
-    claims that ADC+rerank recovered >= 50% of each exact set with mean
-    recall >= 60% — the KMeans
-    codebook isn't SQL-expressible, the recall contract is
-    (operators/ann_eval.py; reference numCandidates dial,
-    backend/api.py:120). ADC-rerank recall floors and the rerank's
-    bit-equality to the float scoring path stay pinned in tests/test_pq.py."""
-    from hybrid_vector_search_spark.operators import pq as pq_op
-
-    cached_report = _ANN_REPORT_CACHE.get(("pq", sf_dir))
-    if cached_report is not None:
-        return cached_report
-    emb, qdf, qvecs = _ann_eval_queries(spark, sf_dir)
-    cached = _PQ_CACHE.get(sf_dir)
-    if cached is None:
-        # same one-sf_dir cache policy as _LSH_CACHE: rotating scale factors
-        # releases the previous encoded corpus
-        for stale_key in [k for k in _PQ_CACHE if k != sf_dir]:
-            _, stale_df = _PQ_CACHE.pop(stale_key)
-            stale_df.unpersist()
-        cb = pq_op.train_pq(emb, "embedding", n_subspaces=8, ksub=32, seed=42)
-        enc = pq_op.encode_pq(
-            emb, cb, id_col="vec_id", vector_col="embedding"
-        ).cache()
-        enc.count()
-        cached = (cb, enc)
-        _PQ_CACHE[sf_dir] = cached
-    cb, enc = cached
-    approx = pq_op.pq_search_batch(
-        enc, cb, qvecs, _ANN_EVAL_K,
-        rerank=emb, rerank_factor=8, id_col="vec_id", vector_col="embedding",
-    ).select("query_id", F.col("id").alias("vec_id"))
-    # measured recall at rerank_factor=8: per-query min 0.7, mean 0.82-0.88
-    report = _ann_recall_report(sf_dir, emb, qdf, approx, floor=0.5, mean_floor=0.6)
-    _ANN_REPORT_CACHE[("pq", sf_dir)] = report
-    return report
+def _drain(spark: SparkSession, start: Callable[[], object]) -> None:
+    """Build and start one availableNow streaming query under
+    _stream_shuffle, wait for it to drain (at most 300 s), and stop it if it
+    is still active."""
+    with _stream_shuffle(spark):
+        q = start()
+        try:
+            q.awaitTermination(300)
+        finally:
+            if q.isActive:
+                q.stop()
 
 
-_SQ_CACHE: dict[str, object] = {}
+def _fold(
+    spark: SparkSession,
+    prefix: str,
+    start: Callable[[str, str], object],
+    read: Callable[[str], DataFrame],
+) -> DataFrame:
+    """Drain ``start(state_dir, checkpoint_path)`` in a fresh workdir, then
+    serve ``read(state_dir)``. Every *_from_state reader checkpoints or
+    collects its small result, so the workdir is dropped before returning."""
+    workdir = tempfile.mkdtemp(prefix=prefix, dir=artifacts.tmpdir())
+    _drain(spark, lambda: start(f"{workdir}/state", f"{workdir}/ckpt"))
+    out = read(f"{workdir}/state")
+    shutil.rmtree(workdir, ignore_errors=True)
+    return out
 
 
-def q_ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self-attesting scalar-quantized ANN (operators/sq.py): every vector
-    stored as dim uint8 codes (4× smaller scan than float32, no training
-    sample, no seed — the bounds are exact corpus min/max per dimension),
-    queries served by asymmetric cosine against the decoded domain in one
-    vectorized Arrow kernel. Per query vector, the exact top-k facts
-    (oracle-verified value-for-value) plus the in-plan claims that SQ8
-    recovered >= 60% of each exact set with mean recall >= 80% — the
-    tightest floor of the four ANN families, because 8-bit affine
-    quantization barely moves cosine neighborhoods (the reason it is the
-    first compression step a 100 TB corpus takes). The packed BINARY codes
-    aren't SQL-expressible; the recall contract is (operators/ann_eval.py;
-    reference numCandidates dial, backend/api.py:120). Encode/decode
-    round-trip and recall floors stay pinned in tests/test_sq.py."""
-    from hybrid_vector_search_spark.operators import sq as sq_op
-
-    cached_report = _ANN_REPORT_CACHE.get(("sq8", sf_dir))
-    if cached_report is not None:
-        return cached_report
-    emb, qdf, qvecs = _ann_eval_queries(spark, sf_dir)
-    cached = _SQ_CACHE.get(sf_dir)
-    if cached is None:
-        # same one-sf_dir cache policy as _PQ_CACHE
-        for stale_key in [k for k in _SQ_CACHE if k != sf_dir]:
-            _, stale_df = _SQ_CACHE.pop(stale_key)
-            stale_df.unpersist()
-        params = sq_op.train_sq(emb, "embedding")
-        enc = sq_op.encode_sq(
-            emb, params, id_col="vec_id", vector_col="embedding"
-        ).cache()
-        enc.count()
-        cached = (params, enc)
-        _SQ_CACHE[sf_dir] = cached
-    params, enc = cached
-    approx = sq_op.sq_search_batch(enc, params, qvecs, _ANN_EVAL_K).select(
-        "query_id", "vec_id"
+def _drain_to_memory(
+    spark: SparkSession,
+    prefix: str,
+    stream: Callable[[], DataFrame],
+    finish: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Drain the streaming DataFrame ``stream()`` into a memory sink and
+    return ``finish(sink table)``, localCheckpointed so the sink's temp view
+    and checkpoint can be dropped before returning."""
+    name = f"q_{prefix}{uuid.uuid4().hex[:8]}"
+    ckpt = tempfile.mkdtemp(prefix=prefix, dir=artifacts.tmpdir())
+    _drain(
+        spark,
+        lambda: stream()
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", f"{ckpt}/ckpt")
+        .trigger(availableNow=True)
+        .start(),
     )
-    # measured recall: per-query min 0.8, mean 0.94-1.0 at sf0.001/sf0.01 —
-    # floors set with margin below
-    report = _ann_recall_report(sf_dir, emb, qdf, approx, floor=0.6, mean_floor=0.8)
-    _ANN_REPORT_CACHE[("sq8", sf_dir)] = report
-    return report
+    out = finish(spark.table(name)).localCheckpoint(eager=True)
+    spark.catalog.dropTempView(name)
+    shutil.rmtree(ckpt, ignore_errors=True)
+    return out
 
 
-# Graph-ANN (NN-Descent + beam search): the build graph is the expensive
-# shared artifact — built ONCE per sf_dir at the pinned parameters and
-# served to both declared queries (same one-sf_dir policy as _LSH_CACHE).
-_GRAPH_CACHE: dict[str, DataFrame] = {}
-_GRAPH_EXACT_CACHE: dict[str, DataFrame] = {}
-_GRAPH_K = 10
-# Working degree 2k and 4 rounds: the convergence point for the bundled
-# near-isotropic corpus (operators/nndescent.py docstring — build_k is the
-# lever that holds recall as n grows; measured graph recall@10 0.996 at
-# n=500 / 0.924 at n=2000 with these exact parameters, deterministic).
-_GRAPH_BUILD_K = 2 * _GRAPH_K
-_GRAPH_ITERS = 4
+def _staged(
+    spark: SparkSession, kind: str, sf_dir: str, write: Callable[[str], None]
+) -> str:
+    """A stream or export source staged ONCE per sf_dir (fixture prep, not
+    the operator under bench): ``write(path)`` fills artifacts.path(kind,
+    sf_dir) on the first call and repeat calls reuse the files."""
+
+    def build() -> str:
+        src = artifacts.path(kind, sf_dir)
+        write(src)
+        return src
+
+    return artifacts.get(spark, kind, sf_dir, build)
 
 
-def _graph_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The degree-``_GRAPH_BUILD_K`` NN-Descent graph for this sf_dir (the
-    persistent index artifact, HNSW's batch analog — localCheckpointed so
-    both declared queries and every beam hop reuse one materialization)."""
-    from hybrid_vector_search_spark.operators import nndescent
-
-    g = _GRAPH_CACHE.get(sf_dir)
-    if g is None:
-        for stale_key in [k for k in _GRAPH_CACHE if k != sf_dir]:
-            _GRAPH_CACHE.pop(stale_key)
-        for stale_key in [k for k in _GRAPH_EXACT_CACHE if k != sf_dir]:
-            _GRAPH_EXACT_CACHE.pop(stale_key).unpersist()
-        emb, _, _ = _ann_eval_queries(spark, sf_dir)
-        g = nndescent.knn_graph_nndescent(
-            emb,
-            k=_GRAPH_BUILD_K,
-            iterations=_GRAPH_ITERS,
-            seed=0,
-        ).localCheckpoint(eager=True)
-        _GRAPH_CACHE[sf_dir] = g
-    return g
-
-
-def q_knn_graph_nndescent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self-attesting NN-Descent k-NN graph (operators/nndescent.py) — the
-    batch analog of the HNSW index Atlas mongot builds for the reference's
-    `$vectorSearch` (reference indexes.py:55-71). Report shape = the
-    ann_ivf_topk attestation, but over EVERY corpus node (the graph's
-    contract is per-node): for each node, the exact top-10-excluding-self
-    facts (oracle-verified value-for-value — brute-force cosine is fully
-    SQL-expressible) plus the in-plan claims that the node's graph edges
-    recovered >= 30% of its exact neighbor set and the mean edge recall
-    over the whole corpus is >= 86%. xxhash64 bucket init isn't DuckDB-
-    replayable, so the graph itself is attested, not replayed — measured
-    mean recall@10 at build_k=2k, 4 rounds: 0.997 (sf0.001), 0.996
-    (sf0.01), 0.924 (sf0.1); per-node min 0.5-0.9. Floors pinned again in
-    tests/test_nndescent.py."""
-    from hybrid_vector_search_spark.operators import ann_eval
-    from hybrid_vector_search_spark.operators import knn as knn_op
-    from hybrid_vector_search_spark.operators.nndescent import _top_k_per_src
-
-    cached_report = _ANN_REPORT_CACHE.get(("graph", sf_dir))
-    if cached_report is not None:
-        return cached_report
-    emb, _, _ = _ann_eval_queries(spark, sf_dir)
-    graph = _graph_index(spark, sf_dir)
-    exact = _GRAPH_EXACT_CACHE.get(sf_dir)
-    if exact is None:
-        # exact side: every node as a query, top-(k+1) bulk knn_join then
-        # drop self and re-rank — the true top-k-excluding-self whether or
-        # not a duplicate vector ties with self at 1.0
-        from pyspark.sql import Window
-
-        qall = emb.select(F.col("vec_id").alias("query_id"), "embedding")
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("vec_id")
-        )
-        exact = (
-            knn_op.knn_join(qall, emb, k=_GRAPH_K + 1, metric="cosine")
-            .where(F.col("vec_id") != F.col("query_id"))
-            .withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") <= _GRAPH_K)
-            .drop("_rk")
-            .cache()
-        )
-        exact.count()
-        _GRAPH_EXACT_CACHE[sf_dir] = exact
-    approx = _top_k_per_src(graph, _GRAPH_K).select(
-        F.col("src").alias("query_id"), F.col("dst").alias("vec_id")
+def _staged_events(
+    spark: SparkSession, kind: str, sf_dir: str, cols: list[str], n_files: int = 4
+) -> str:
+    """events[cols] staged as ``n_files`` parquet files."""
+    return _staged(
+        spark, kind, sf_dir,
+        lambda src: load_table(spark, sf_dir, "events").select(*cols)
+        .repartition(n_files).write.mode("overwrite").parquet(src),
     )
-    report = ann_eval.recall_report(
-        exact, approx, k=_GRAPH_K, floor=0.3, mean_floor=0.86
-    )
-    _ANN_REPORT_CACHE[("graph", sf_dir)] = report
-    return report
-
-
-def q_knn_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self-attesting batch beam search over the NN-Descent graph — the
-    query half of graph ANN (HNSW's search phase in batch form: the whole
-    query RELATION joins the edge list per hop instead of chasing pointers
-    per query; operators/nndescent.py knn_graph_search). Per query vector,
-    the exact top-k facts (oracle-verified value-for-value, the standard
-    5-query eval set) plus the in-plan claims that beam=20/hops=3 search
-    recovered >= 60% of each exact set with mean recall >= 94% — measured
-    1.0 / 1.0 / 0.98 at sf0.001 / sf0.01 / sf0.1 on the shared
-    build_k=2k graph; beam re-scores real neighborhoods with the true
-    query vector, so its recall sits above the graph's own edge recall.
-    Graph construction isn't DuckDB-replayable; the recall contract is
-    (operators/ann_eval.py; reference numCandidates dial,
-    backend/api.py:120). Floors pinned again in tests/test_nndescent.py."""
-    from hybrid_vector_search_spark.operators import nndescent
-
-    cached_report = _ANN_REPORT_CACHE.get(("graph_search", sf_dir))
-    if cached_report is not None:
-        return cached_report
-    emb, qdf, _ = _ann_eval_queries(spark, sf_dir)
-    graph = _graph_index(spark, sf_dir)
-    approx = nndescent.knn_graph_search(
-        graph, emb, qdf, k=_ANN_EVAL_K, beam=20, hops=3, seed=0
-    ).select("query_id", "vec_id")
-    report = _ann_recall_report(
-        sf_dir, emb, qdf, approx, floor=0.6, mean_floor=0.94
-    )
-    _ANN_REPORT_CACHE[("graph_search", sf_dir)] = report
-    return report
-
-
-# ------------------------------------------------------- streaming (batch parity)
 
 
 def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1053,41 +941,23 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine and oracle rank the same universe; the bounded-candidate trim
     policy for unbounded streams stays pinned in tests/test_streaming_sketch.
     """
-    import shutil
-    import tempfile
-
     from hybrid_vector_search_spark.streaming.sketch import (
         heavy_hitters_from_state,
         stream_heavy_hitters,
     )
 
-    # stage the 4-file stream source ONCE per sf_dir (fixture prep, not the
-    # operator under bench); every call still runs a full fresh-state fold
-    src = _STREAM_SRC_CACHE.get(sf_dir)
-    if src is None:
-        safe = sf_dir.strip("/").replace("/", "_")
-        src = f"{_session_tmpdir()}/stream_src/{safe}"
-        ev = load_table(spark, sf_dir, "events").select("user_id")
-        ev.repartition(4).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[sf_dir] = src
-    workdir = tempfile.mkdtemp(prefix="stream_hh_", dir=_session_tmpdir())
-    with _stream_shuffle(spark):
-        q = stream_heavy_hitters(
-            spark, src, "user_id",
-            state_dir=f"{workdir}/state", checkpoint_path=f"{workdir}/ckpt",
+    # every call still runs a full fresh-state fold over the staged source
+    src = _staged_events(spark, "stream_src", sf_dir, ["user_id"])
+    # heavy_hitters_from_state localCheckpoints (eager) the 20-row result
+    return _fold(
+        spark, "stream_hh_",
+        lambda state, ckpt: stream_heavy_hitters(
+            spark, src, "user_id", state_dir=state, checkpoint_path=ckpt,
             k=20, max_files_per_trigger=2,
             candidates_per_partition=100_000, max_candidates=1_000_000,
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
-    # heavy_hitters_from_state localCheckpoints (eager) the 20-row result, so
-    # the staging dirs can be dropped before returning
-    out = heavy_hitters_from_state(spark, f"{workdir}/state", 20)
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
+        ),
+        lambda state: heavy_hitters_from_state(spark, state, 20),
+    )
 
 
 def q_stream_daily_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1101,37 +971,20 @@ def q_stream_daily_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     at this cardinality — union is associative, so batching is invisible;
     the algebraic stream≡batch parity is pinned in
     tests/test_streaming_sketch.py)."""
-    import shutil
-    import tempfile
-
     from hybrid_vector_search_spark.streaming.sketch import (
         daily_distinct_from_state,
         stream_daily_distinct,
     )
 
-    src = _STREAM_SRC_CACHE.get(("daily", sf_dir))
-    if src is None:
-        safe = sf_dir.strip("/").replace("/", "_")
-        src = f"{_session_tmpdir()}/stream_daily/{safe}"
-        ev = load_table(spark, sf_dir, "events").select("ts", "user_id")
-        ev.repartition(4).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[("daily", sf_dir)] = src
-    workdir = tempfile.mkdtemp(prefix="stream_daily_", dir=_session_tmpdir())
-    with _stream_shuffle(spark):
-        q = stream_daily_distinct(
-            spark, src, "ts", "user_id",
-            state_dir=f"{workdir}/state", checkpoint_path=f"{workdir}/ckpt",
+    src = _staged_events(spark, "stream_daily", sf_dir, ["ts", "user_id"])
+    est = _fold(
+        spark, "stream_daily_",
+        lambda state, ckpt: stream_daily_distinct(
+            spark, src, "ts", "user_id", state_dir=state, checkpoint_path=ckpt,
             max_files_per_trigger=2, commit_mode="manifest",
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
-    est = daily_distinct_from_state(
-        spark, f"{workdir}/state", commit_mode="manifest"
+        ),
+        lambda state: daily_distinct_from_state(spark, state, commit_mode="manifest"),
     )
-    shutil.rmtree(workdir, ignore_errors=True)
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("day"))
@@ -1151,27 +1004,27 @@ def q_stream_daily_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _staged_time_ordered_events(
+    spark: SparkSession, sf_dir: str, cols: list[str]
+) -> str:
+    """events[cols] staged as three TIME-ORDERED parquet files — the
+    append-log delivery contract the stateful stream folds (markov, funnel,
+    OHLC) assume. Built once per sf_dir and column list, and shared by every
+    stream twin that folds those columns."""
 
-def _staged_time_ordered_events(spark: SparkSession, sf_dir: str) -> str:
-    """Events staged as three TIME-ORDERED parquet files — the append-log
-    delivery contract the stateful stream folds (markov, funnel) assume.
-    Built once per sf_dir and shared by every stream twin that folds the
-    events table."""
-    src = _STREAM_SRC_CACHE.get(("events3", sf_dir))
-    if src is None:
-        safe = sf_dir.strip("/").replace("/", "_")
-        src = f"{_session_tmpdir()}/stream_events3/{safe}"
-        ev = load_table(spark, sf_dir, "events").select(
-            "user_id", "ts", "event_id", "event_type"
-        )
+    def write(src: str) -> None:
+        ev = load_table(spark, sf_dir, "events").select(*cols)
         cuts = ev.agg(
             F.percentile_approx("ts", F.array(F.lit(0.33), F.lit(0.66)), 10_000).alias("c")
         ).collect()[0]["c"]
         ev.where(F.col("ts") <= cuts[0]).coalesce(1).write.mode("overwrite").parquet(src)
         ev.where((F.col("ts") > cuts[0]) & (F.col("ts") <= cuts[1])).coalesce(1).write.mode("append").parquet(src)
         ev.where(F.col("ts") > cuts[1]).coalesce(1).write.mode("append").parquet(src)
-        _STREAM_SRC_CACHE[("events3", sf_dir)] = src
-    return src
+
+    return _staged(spark, "stream_events3_" + "_".join(cols), sf_dir, write)
+
+
+_EVENTS3_COLS = ["user_id", "ts", "event_id", "event_type"]
 
 
 def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1180,31 +1033,20 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming.sketch.stream_funnel (per-user stage-timestamp frontier);
     the maintained stage counts must equal the batch window recount, so
     the oracle is the identical SQL the batch query answers to."""
-    import shutil
-    import tempfile
-
     from hybrid_vector_search_spark.streaming.sketch import (
         funnel_from_state,
         stream_funnel,
     )
 
-    src = _staged_time_ordered_events(spark, sf_dir)
-    workdir = tempfile.mkdtemp(prefix="stream_funnel_", dir=_session_tmpdir())
-    with _stream_shuffle(spark):
-        q = stream_funnel(
-            spark, src,
-            state_dir=f"{workdir}/state", checkpoint_path=f"{workdir}/ckpt",
+    src = _staged_time_ordered_events(spark, sf_dir, _EVENTS3_COLS)
+    return _fold(
+        spark, "stream_funnel_",
+        lambda state, ckpt: stream_funnel(
+            spark, src, state_dir=state, checkpoint_path=ckpt,
             max_files_per_trigger=1,
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
-    out = funnel_from_state(spark, f"{workdir}/state")
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
-
+        ),
+        lambda state: funnel_from_state(spark, state),
+    )
 
 
 def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1213,30 +1055,20 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-ordered file folds in as one candle-sized merge and the
     maintained state equals the batch recount for any batching — same
     oracle as the batch query."""
-    import shutil
-    import tempfile
-
     from hybrid_vector_search_spark.streaming.sketch import (
         ohlc_from_state,
         stream_ohlc,
     )
 
-    src_dir = _staged_time_ordered_events_with_value(spark, sf_dir)
-    workdir = tempfile.mkdtemp(prefix="stream_ohlc_", dir=_session_tmpdir())
-    with _stream_shuffle(spark):
-        q = stream_ohlc(
-            spark, src_dir,
-            state_dir=f"{workdir}/state", checkpoint_path=f"{workdir}/ckpt",
+    src = _staged_time_ordered_events(spark, sf_dir, _EVENTS3_COLS + ["value"])
+    return _fold(
+        spark, "stream_ohlc_",
+        lambda state, ckpt: stream_ohlc(
+            spark, src, state_dir=state, checkpoint_path=ckpt,
             max_files_per_trigger=1,
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
-    out = ohlc_from_state(spark, f"{workdir}/state")
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
+        ),
+        lambda state: ohlc_from_state(spark, state),
+    )
 
 
 def q_stream_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1246,39 +1078,20 @@ def q_stream_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANY batching reproduces the batch histogram EXACTLY at read time
     (streaming/sketch.stream_histogram; parity additionally pinned in
     tests/test_streaming_sketch.py). Same oracle as the batch query."""
-    import shutil
-    import tempfile
-
     from hybrid_vector_search_spark.streaming.sketch import (
         histogram_from_state,
         stream_histogram,
     )
 
-    src = _STREAM_SRC_CACHE.get(("histvals", sf_dir))
-    if src is None:
-        safe = sf_dir.strip("/").replace("/", "_")
-        src = f"{_session_tmpdir()}/stream_histvals/{safe}"
-        load_table(spark, sf_dir, "events").select("value").repartition(
-            4
-        ).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[("histvals", sf_dir)] = src
-    workdir = tempfile.mkdtemp(prefix="stream_hist_", dir=_session_tmpdir())
-    with _stream_shuffle(spark):
-        q = stream_histogram(
-            spark, src, "value",
-            state_dir=f"{workdir}/state", checkpoint_path=f"{workdir}/ckpt",
+    src = _staged_events(spark, "stream_histvals", sf_dir, ["value"])
+    return _fold(
+        spark, "stream_hist_",
+        lambda state, ckpt: stream_histogram(
+            spark, src, "value", state_dir=state, checkpoint_path=ckpt,
             max_files_per_trigger=2, commit_mode="manifest",
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
-    out = histogram_from_state(
-        spark, f"{workdir}/state", commit_mode="manifest"
+        ),
+        lambda state: histogram_from_state(spark, state, commit_mode="manifest"),
     )
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
 
 
 def q_stream_event_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1288,42 +1101,22 @@ def q_stream_event_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve computes the identical −p·log2 p DECIMAL ladder over the tiny
     state (streaming/sketch.stream_type_mix). Same oracle as the batch
     query; parity additionally pinned in tests/test_streaming_sketch.py."""
-    import shutil
-    import tempfile
-
     from hybrid_vector_search_spark.streaming.sketch import (
         stream_type_mix,
         type_mix_entropy_from_state,
     )
 
-    src = _STREAM_SRC_CACHE.get(("tsetype", sf_dir))
-    if src is None:
-        safe = sf_dir.strip("/").replace("/", "_")
-        src = f"{_session_tmpdir()}/stream_tsetype/{safe}"
-        load_table(spark, sf_dir, "events").select("ts", "event_type").repartition(
-            4
-        ).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[("tsetype", sf_dir)] = src
-    workdir = tempfile.mkdtemp(prefix="stream_entropy_", dir=_session_tmpdir())
-    with _stream_shuffle(spark):
-        q = stream_type_mix(
-            spark, src, "ts", "event_type",
-            state_dir=f"{workdir}/state", checkpoint_path=f"{workdir}/ckpt",
+    src = _staged_events(spark, "stream_tsetype", sf_dir, ["ts", "event_type"])
+    return _fold(
+        spark, "stream_entropy_",
+        lambda state, ckpt: stream_type_mix(
+            spark, src, "ts", "event_type", state_dir=state, checkpoint_path=ckpt,
             max_files_per_trigger=2, commit_mode="manifest",
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
-    out = type_mix_entropy_from_state(
-        spark, f"{workdir}/state", commit_mode="manifest"
+        ),
+        lambda state: type_mix_entropy_from_state(
+            spark, state, commit_mode="manifest"
+        ),
     )
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
-
-
-_JSONL_SRC_CACHE: dict[str, str] = {}
 
 
 def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1342,12 +1135,9 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    src = _JSONL_SRC_CACHE.get(sf_dir)
-    if src is None:
-        safe = sf_dir.strip("/").replace("/", "_")
-        src = f"{_session_tmpdir()}/jsonl/{safe}"
-        write_jsonl(docs.repartition(8), src)
-        _JSONL_SRC_CACHE[sf_dir] = src
+    src = _staged(
+        spark, "jsonl", sf_dir, lambda src: write_jsonl(docs.repartition(8), src)
+    )
     rb = read_jsonl(
         spark, src,
         "doc_id long, text string, lang string, source string, n_chars long",
@@ -1364,9 +1154,6 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COMPACT_SRC_CACHE: dict[str, str] = {}
-
-
 def q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-files compaction driver-checked end-to-end (sources/sinks.py
     compact): the documents table staged as 64 tiny files (the streaming-
@@ -1378,15 +1165,13 @@ def q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the compacted directory, a physical-layout fact)."""
     from hybrid_vector_search_spark.sources.sinks import compact
 
-    src = _COMPACT_SRC_CACHE.get(sf_dir)
-    safe = sf_dir.strip("/").replace("/", "_")
-    if src is None:
-        src = f"{_session_tmpdir()}/compact/{safe}/tiny"
-        load_table(spark, sf_dir, "documents").select(
+    src = _staged(
+        spark, "compact_src", sf_dir,
+        lambda src: load_table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "n_chars"
-        ).repartition(64).write.mode("overwrite").parquet(src)
-        _COMPACT_SRC_CACHE[sf_dir] = src
-    dst = f"{_session_tmpdir()}/compact/{safe}/out"
+        ).repartition(64).write.mode("overwrite").parquet(src),
+    )
+    dst = artifacts.path("compact_out", sf_dir)
     compact(spark, src, dst, target_rows_per_file=2000)
     rb = spark.read.parquet(dst)
     # project input_file_name() BEFORE aggregating (Spark 4 rejects
@@ -1407,26 +1192,6 @@ def q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _staged_time_ordered_events_with_value(spark: SparkSession, sf_dir: str) -> str:
-    """Same three-file time-ordered staging as _staged_time_ordered_events
-    but carrying the value column (the OHLC stream folds values)."""
-    src = _STREAM_SRC_CACHE.get(("events3v", sf_dir))
-    if src is None:
-        safe = sf_dir.strip("/").replace("/", "_")
-        src = f"{_session_tmpdir()}/stream_events3v/{safe}"
-        ev = load_table(spark, sf_dir, "events").select(
-            "user_id", "ts", "event_id", "event_type", "value"
-        )
-        cuts = ev.agg(
-            F.percentile_approx("ts", F.array(F.lit(0.33), F.lit(0.66)), 10_000).alias("c")
-        ).collect()[0]["c"]
-        ev.where(F.col("ts") <= cuts[0]).coalesce(1).write.mode("overwrite").parquet(src)
-        ev.where((F.col("ts") > cuts[0]) & (F.col("ts") <= cuts[1])).coalesce(1).write.mode("append").parquet(src)
-        ev.where(F.col("ts") > cuts[1]).coalesce(1).write.mode("append").parquet(src)
-        _STREAM_SRC_CACHE[("events3v", sf_dir)] = src
-    return src
-
-
 def q_stream_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming twin of events_markov_transitions: events staged
     as three TIME-ORDERED files (the append-log contract) and folded one
@@ -1435,30 +1200,20 @@ def q_stream_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     naive per-batch recount loses. The maintained matrix must equal the
     batch recount over the whole stream, so the oracle is the identical
     SQL the batch query answers to."""
-    import shutil
-    import tempfile
-
     from hybrid_vector_search_spark.streaming.sketch import (
         markov_from_state,
         stream_markov,
     )
 
-    src = _staged_time_ordered_events(spark, sf_dir)
-    workdir = tempfile.mkdtemp(prefix="stream_markov_", dir=_session_tmpdir())
-    with _stream_shuffle(spark):
-        q = stream_markov(
-            spark, src,
-            state_dir=f"{workdir}/state", checkpoint_path=f"{workdir}/ckpt",
+    src = _staged_time_ordered_events(spark, sf_dir, _EVENTS3_COLS)
+    return _fold(
+        spark, "stream_markov_",
+        lambda state, ckpt: stream_markov(
+            spark, src, state_dir=state, checkpoint_path=ckpt,
             max_files_per_trigger=1,
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
-    out = markov_from_state(spark, f"{workdir}/state")
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
+        ),
+        lambda state: markov_from_state(spark, state),
+    )
 
 
 def q_stream_ivm_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1469,18 +1224,12 @@ def q_stream_ivm_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Decimal partials form a commutative monoid, so the maintained view
     equals the from-scratch recompute over the live set however the stream
     was batched; the oracle states exactly that recompute."""
-    import shutil
-    import tempfile
-
     from hybrid_vector_search_spark.streaming.sketch import (
         ivm_view_from_state,
         stream_ivm,
     )
 
-    src = _STREAM_SRC_CACHE.get(("ivm", sf_dir))
-    if src is None:
-        safe = sf_dir.strip("/").replace("/", "_")
-        src = f"{_session_tmpdir()}/stream_ivm/{safe}"
+    def write(src: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
         )
@@ -1489,21 +1238,17 @@ def q_stream_ivm_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         ins.where("o_orderkey % 2 = 0").coalesce(1).write.mode("overwrite").parquet(src)
         ins.where("o_orderkey % 2 = 1").coalesce(1).write.mode("append").parquet(src)
         dels.coalesce(1).write.mode("append").parquet(src)
-        _STREAM_SRC_CACHE[("ivm", sf_dir)] = src
-    workdir = tempfile.mkdtemp(prefix="stream_ivm_", dir=_session_tmpdir())
-    with _stream_shuffle(spark):
-        q = stream_ivm(
+
+    src = _staged(spark, "stream_ivm", sf_dir, write)
+    out = _fold(
+        spark, "stream_ivm_",
+        lambda state, ckpt: stream_ivm(
             spark, src, ["o_orderpriority"], "o_totalprice",
-            state_dir=f"{workdir}/state", checkpoint_path=f"{workdir}/ckpt",
+            state_dir=state, checkpoint_path=ckpt,
             op_col="_op", max_files_per_trigger=1, commit_mode="manifest",
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
-    out = ivm_view_from_state(spark, f"{workdir}/state", commit_mode="manifest")
-    shutil.rmtree(workdir, ignore_errors=True)
+        ),
+        lambda state: ivm_view_from_state(spark, state, commit_mode="manifest"),
+    )
     return out.orderBy("o_orderpriority")
 
 
@@ -1519,46 +1264,22 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ms-granular timeout boundary, while the stream/batch gap definition
     stays pinned identical at microsecond precision (events.py:102-106).
     sum_value is the state fold's float sum, rounded 6dp on both sides."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from hybrid_vector_search_spark.streaming.events import stream_sessionize
 
-    src = _STREAM_SRC_CACHE.get(("sess", sf_dir))
-    if src is None:
-        safe = sf_dir.strip("/").replace("/", "_")
-        src = f"{_session_tmpdir()}/stream_sess_src/{safe}"
-        ev = (
-            load_table(spark, sf_dir, "events")
-            .where(F.col("user_id") % 10 == 0)
-            .select("user_id", "ts", "value")  # all the state fold reads
-        )
-        # ONE file -> availableNow drains it as ONE batch; the state kernel
-        # sorts each user's events by ts inside the batch, so no cross-batch
-        # ordering contract is needed for this query
-        ev.coalesce(1).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[("sess", sf_dir)] = src
-    name = f"q_stream_sess_{_uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="stream_sess_", dir=_session_tmpdir())
-    with _stream_shuffle(spark):
-        q = (
-            stream_sessionize(spark, src)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{ckpt}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
-    out = (
-        spark.table(name)
-        .where("not open")
+    # ONE file -> availableNow drains it as ONE batch; the state kernel
+    # sorts each user's events by ts inside the batch, so no cross-batch
+    # ordering contract is needed for this query
+    src = _staged(
+        spark, "stream_sess_src", sf_dir,
+        lambda src: load_table(spark, sf_dir, "events")
+        .where(F.col("user_id") % 10 == 0)
+        .select("user_id", "ts", "value")  # all the state fold reads
+        .coalesce(1).write.mode("overwrite").parquet(src),
+    )
+    return _drain_to_memory(
+        spark, "stream_sess_",
+        lambda: stream_sessionize(spark, src),
+        lambda sink: sink.where("not open")
         .select(
             "user_id",
             "session_start",
@@ -1566,12 +1287,8 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             F.round("sum_value", 6).alias("sum_value"),
         )
-        .orderBy("user_id", "session_start")
-        .localCheckpoint(eager=True)
+        .orderBy("user_id", "session_start"),
     )
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
 
 
 def q_stream_view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1582,49 +1299,23 @@ def q_stream_view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch join — which is what the oracle runs. user_id % 2 = 1 subset
     keeps the fan-out bench-sized while yielding a non-trivial match set
     (~80 pairs at sf0.01)."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from hybrid_vector_search_spark.streaming.events import stream_view_click_join
 
-    src = _STREAM_SRC_CACHE.get(("vc", sf_dir))
-    if src is None:
-        safe = sf_dir.strip("/").replace("/", "_")
-        src = f"{_session_tmpdir()}/stream_vc_src/{safe}"
-        ev = (
-            load_table(spark, sf_dir, "events")
-            .where(F.col("user_id") % 2 == 1)
-            .select("user_id", "event_id", "ts", "event_type")
-        )
-        ev.coalesce(1).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[("vc", sf_dir)] = src
-    name = f"q_stream_vc_{_uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="stream_vc_", dir=_session_tmpdir())
-    with _stream_shuffle(spark):
-        q = (
-            stream_view_click_join(spark, src, max_lag_minutes=240, watermark="4 hours")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{ckpt}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
-    out = (
-        spark.table(name)
-        .select("view_id", "click_id", "view_ts", "click_ts")
-        .orderBy("view_id", "click_id")
-        .localCheckpoint(eager=True)
+    src = _staged(
+        spark, "stream_vc_src", sf_dir,
+        lambda src: load_table(spark, sf_dir, "events")
+        .where(F.col("user_id") % 2 == 1)
+        .select("user_id", "event_id", "ts", "event_type")
+        .coalesce(1).write.mode("overwrite").parquet(src),
     )
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    return _drain_to_memory(
+        spark, "stream_vc_",
+        lambda: stream_view_click_join(
+            spark, src, max_lag_minutes=240, watermark="4 hours"
+        ),
+        lambda sink: sink.select("view_id", "click_id", "view_ts", "click_ts")
+        .orderBy("view_id", "click_id"),
+    )
 
 
 def q_stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1633,46 +1324,20 @@ def q_stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     redelivery of every 7th event (exact copies, as a retrying producer
     emits); the drained stream must collapse them — the oracle is DISTINCT
     over the planted-duplicate union. user_id % 10 = 6 subset."""
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from hybrid_vector_search_spark.streaming.events import stream_dedup_events
 
-    src = _STREAM_SRC_CACHE.get(("dedup", sf_dir))
-    if src is None:
-        safe = sf_dir.strip("/").replace("/", "_")
-        src = f"{_session_tmpdir()}/stream_dedup_src/{safe}"
+    def write(src: str) -> None:
         ev = load_table(spark, sf_dir, "events").where(F.col("user_id") % 10 == 6)
         staged = ev.unionAll(ev.where(F.col("event_id") % 7 == 0))
         staged.coalesce(1).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[("dedup", sf_dir)] = src
-    name = f"q_stream_dd_{_uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="stream_dd_", dir=_session_tmpdir())
-    with _stream_shuffle(spark):
-        q = (
-            stream_dedup_events(spark, src)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{ckpt}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
-    out = (
-        spark.table(name)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .orderBy("event_id")
-        .localCheckpoint(eager=True)
+
+    src = _staged(spark, "stream_dedup_src", sf_dir, write)
+    return _drain_to_memory(
+        spark, "stream_dd_",
+        lambda: stream_dedup_events(spark, src),
+        lambda sink: sink.select("event_id", "ts", "user_id", "event_type", "value")
+        .orderBy("event_id"),
     )
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
 
 
 def q_events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1993,8 +1658,7 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hybrid_vector_search_spark.sources.sinks import bulk_write, column_add_rewrite
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    safe = sf_dir.strip("/").replace("/", "_")
-    base = f"{_session_tmpdir()}/sink/{safe}"
+    base = artifacts.path("sink", sf_dir)
     bulk_write(docs, f"{base}/raw", mode="overwrite", max_records_per_file=200)
     readback = column_add_rewrite(
         spark, f"{base}/raw", f"{base}/enriched",
@@ -2021,9 +1685,6 @@ ORDER BY lang
 """
 
 
-_BSON_DUMP_CACHE: dict[str, str] = {}
-
-
 def q_bson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7 BSON ingest driver-checked (the reference distributes its catalog
     as dump/catalog/products.bson.gz — mongodump layout): write the
@@ -2033,8 +1694,6 @@ def q_bson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates the source table directly — equality proves the
     encode → gzip → decode → from_json path loses and alters nothing,
     including full text content (sum of lengths + distinct ids)."""
-    import shutil
-
     from hybrid_vector_search_spark.sources.bson_reader import (
         read_bson_dump,
         write_bson_dump,
@@ -2043,18 +1702,16 @@ def q_bson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    # stage the dump ONCE per sf_dir (the _STREAM_SRC_CACHE discipline:
-    # fixture prep, not the operator under bench) — the first call still
-    # exercises drop-and-replace + the full encode path, and EVERY call
-    # re-runs the gzip->walker->from_json decode the oracle equality pins;
-    # repeated bench runs stop re-paying a full corpus write per run
-    base = _BSON_DUMP_CACHE.get(sf_dir)
-    if base is None:
-        safe = sf_dir.strip("/").replace("/", "_")
-        base = f"{_session_tmpdir()}/bson/{safe}"
+    # stage the dump ONCE per sf_dir (_staged: fixture prep, not the
+    # operator under bench) — the first call still exercises
+    # drop-and-replace + the full encode path, and EVERY call re-runs the
+    # gzip->walker->from_json decode the oracle equality pins; repeated
+    # bench runs stop re-paying a full corpus write per run
+    def write(base: str) -> None:
         shutil.rmtree(base, ignore_errors=True)  # drop-and-replace idempotency
         write_bson_dump(docs.repartition(8), base)
-        _BSON_DUMP_CACHE[sf_dir] = base
+
+    base = _staged(spark, "bson", sf_dir, write)
     rb = read_bson_dump(
         spark, base, "doc_id long, text string, lang string, source string, n_chars long"
     )
@@ -2316,6 +1973,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     of the r8 tier. Positions 51+ continue r8/r9/r10/r11 in standing
     order, then the r12-checked window freshest-evidence-last. Every
     declared query has an oracle_sql() twin."""
+    memo = artifacts.memo
     return {
         # --- r13 window, positions 1-2: the NEW graph-ANN family
         "knn_graph_nndescent": q_knn_graph_nndescent,
@@ -2324,7 +1982,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hll_event_overlap": relational.hll_event_overlap,
         "doc_quality_skyline": pipeline.doc_quality_skyline,
         "k_anonymity_audit": pipeline.k_anonymity_audit,
-        "link_hop_distances": _memo("link_hop_distances", pipeline.link_hop_distances),
+        "link_hop_distances": memo("link_hop_distances", pipeline.link_hop_distances),
         "l_diversity_audit": pipeline.l_diversity_audit,
         "ivm_revenue_apply": relational.ivm_revenue_apply,
         "approx_sum_sampled": relational.approx_sum_sampled,
@@ -2357,11 +2015,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_dow_hour": relational.events_dow_hour,
         "flatten_roundtrip": relational.flatten_roundtrip,
         "dedup_minhash_lsh": pipeline.dedup_minhash_lsh,
-        "dedup_components_star": _memo("dedup_components_star", pipeline.dedup_components_star),
+        "dedup_components_star": memo("dedup_components_star", pipeline.dedup_components_star),
         "pii_redact": pipeline.pii_redact,
         "dedup_exact": pipeline.dedup_exact,
         "ngram_jaccard_pairs": pipeline.ngram_jaccard_pairs,
-        "dedup_components": _memo("dedup_components", pipeline.dedup_components),
+        "dedup_components": memo("dedup_components", pipeline.dedup_components),
         "dedup_simhash": pipeline.dedup_simhash,
         "dedup_embedding_cosine": pipeline.dedup_embedding_cosine,
         "decontaminate": pipeline.decontaminate,
@@ -2392,15 +2050,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_curriculum": pipeline.quality_curriculum,
         "copurchase_lift": relational.copurchase_lift,
         "attribution_first_last": relational.attribution_first_last,
-        "dedup_kcore": _memo("dedup_kcore", pipeline.dedup_kcore),
+        "dedup_kcore": memo("dedup_kcore", pipeline.dedup_kcore),
         "events_retention": relational.events_retention,
         "events_markov_transitions": relational.events_markov_transitions,
         "session_path_topk": relational.session_path_topk,
-        "stream_markov_transitions": _memo("stream_markov_transitions", q_stream_markov),
+        "stream_markov_transitions": memo("stream_markov_transitions", q_stream_markov),
         "ann_ivfpq_euclid_topk": q_ann_ivfpq_euclid_topk,
         "lineitem_correlations": relational.lineitem_correlations,
         "nation_revenue_pareto": relational.nation_revenue_pareto,
-        "dedup_canonical": _memo("dedup_canonical", pipeline.dedup_canonical),
+        "dedup_canonical": memo("dedup_canonical", pipeline.dedup_canonical),
         "hybrid_fusion_details": q_hybrid_fusion_details,
         "user_purge_counts": pipeline.user_purge_counts,
         "url_domain_stats": pipeline.url_domain_stats,
@@ -2408,7 +2066,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "distinct_values": q_distinct_values,
         "heavy_hitters_cm": q_heavy_hitters_cm,
         "dedup_embedding_ivf": pipeline.dedup_embedding_ivf,
-        "stream_heavy_hitters": _memo("stream_heavy_hitters", q_stream_heavy_hitters),
+        "stream_heavy_hitters": memo("stream_heavy_hitters", q_stream_heavy_hitters),
         "multimodal_resize_stats": pipeline.multimodal_resize_stats,
         "seq_pack": pipeline.seq_pack,
         "source_cap": pipeline.source_cap,
@@ -2420,9 +2078,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "span_dedup": pipeline.span_dedup,
         "lang_temperature_mix": pipeline.lang_temperature_mix,
         "bpe_token_stats": pipeline.bpe_token_stats,
-        "stream_sessionize": _memo("stream_sessionize", q_stream_sessionize),
-        "stream_view_click_join": _memo("stream_view_click_join", q_stream_view_click_join),
-        "stream_dedup_events": _memo("stream_dedup_events", q_stream_dedup_events),
+        "stream_sessionize": memo("stream_sessionize", q_stream_sessionize),
+        "stream_view_click_join": memo("stream_view_click_join", q_stream_view_click_join),
+        "stream_dedup_events": memo("stream_dedup_events", q_stream_dedup_events),
         "events_funnel": relational.events_funnel,
         "revenue_rollup": relational.revenue_rollup,
         "decontaminate_bloom": pipeline.decontaminate_bloom,
@@ -2444,12 +2102,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ab_test_lift": relational.ab_test_lift,
         "ks_test_ab": relational.ks_test_ab,
         "bounce_rate_daily": relational.bounce_rate_daily,
-        "semdedup_prune": _memo("semdedup_prune", pipeline.semdedup_prune),
+        "semdedup_prune": memo("semdedup_prune", pipeline.semdedup_prune),
         "embedding_mahalanobis_outliers": pipeline.embedding_mahalanobis_outliers,
         "ngram_novelty_scores": pipeline.ngram_novelty_scores,
         "revenue_changepoint": relational.revenue_changepoint,
-        "journey_reach_prob": _memo("journey_reach_prob", relational.journey_reach_prob),
-        "katz_central_docs": _memo("katz_central_docs", pipeline.katz_central_docs),
+        "journey_reach_prob": memo("journey_reach_prob", relational.journey_reach_prob),
+        "katz_central_docs": memo("katz_central_docs", pipeline.katz_central_docs),
         "flesch_reading_ease": pipeline.flesch_reading_ease,
         "user_active_streaks": relational.user_active_streaks,
         "customer_balance_gini": relational.customer_balance_gini,
@@ -2457,19 +2115,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "token_zipf_fit": pipeline.token_zipf_fit,
         "source_keyness_g2": pipeline.source_keyness_g2,
         "tfidf_doc_pairs": pipeline.tfidf_doc_pairs,
-        "stream_funnel_counts": _memo("stream_funnel_counts", q_stream_funnel),
+        "stream_funnel_counts": memo("stream_funnel_counts", q_stream_funnel),
         "entity_resolution_pairs": relational.entity_resolution_pairs,
         "revenue_dow_anomaly": relational.revenue_dow_anomaly,
-        "harmonic_central_docs": _memo("harmonic_central_docs", pipeline.harmonic_central_docs),
+        "harmonic_central_docs": memo("harmonic_central_docs", pipeline.harmonic_central_docs),
         "revenue_autocorr7": relational.revenue_autocorr7,
-        "embedding_pc1_variance": _memo("embedding_pc1_variance", pipeline.embedding_pc1_variance),
+        "embedding_pc1_variance": memo("embedding_pc1_variance", pipeline.embedding_pc1_variance),
         "minhash_lsh_eval": pipeline.minhash_lsh_eval,
         "events_value_ohlc_hourly": relational.events_value_ohlc_hourly,
         "neyman_allocation_sample": relational.neyman_allocation_sample,
         "kaplan_meier_conversion": relational.kaplan_meier_conversion,
         "graph_assortativity": relational.graph_assortativity,
         "dedup_token_savings": pipeline.dedup_token_savings,
-        "stream_ohlc_hourly": _memo("stream_ohlc_hourly", q_stream_ohlc),
+        "stream_ohlc_hourly": memo("stream_ohlc_hourly", q_stream_ohlc),
         "conversion_wilson_bounds": relational.conversion_wilson_bounds,
         "ucb1_arm_scores": relational.ucb1_arm_scores,
         "embed_roundtrip": q_embed_roundtrip,
@@ -2481,14 +2139,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "approx_topk_users": relational.approx_topk_users,
         "ann_ivf_topk": q_ann_ivf_topk,
         "ann_ivfpq_topk": q_ann_ivfpq_topk,
-        "stream_daily_distinct": _memo("stream_daily_distinct", q_stream_daily_distinct),
-        "stream_ivm_revenue": _memo("stream_ivm_revenue", q_stream_ivm_revenue),
+        "stream_daily_distinct": memo("stream_daily_distinct", q_stream_daily_distinct),
+        "stream_ivm_revenue": memo("stream_ivm_revenue", q_stream_ivm_revenue),
         "mmr_rerank": q_mmr_rerank,
         "bson_roundtrip": q_bson_roundtrip,
         # --- r11 evidence (freshest — the r11-checked window, minus the
         # code-touched rows promoted to this round's head)
-        "ppr_top_docs": _memo("ppr_top_docs", pipeline.ppr_top_docs),
-        "pagerank_top_docs": _memo("pagerank_top_docs", pipeline.pagerank_top_docs),
+        "ppr_top_docs": memo("ppr_top_docs", pipeline.ppr_top_docs),
+        "pagerank_top_docs": memo("pagerank_top_docs", pipeline.pagerank_top_docs),
         "dedup_canonical_shared": pipeline.dedup_canonical_shared,
         "dedup_cluster_sizes_shared": pipeline.dedup_cluster_sizes_shared,
         "wav_window_stats": pipeline.wav_window_stats,
@@ -2503,16 +2161,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spearman_qty_discount": relational.spearman_qty_discount,
         "hard_negative_mining": pipeline.hard_negative_mining,
         "ann_dim_truncation_eval": pipeline.ann_dim_truncation_eval,
-        "hits_hub_authority": _memo("hits_hub_authority", pipeline.hits_hub_authority),
-        "stream_value_histogram": _memo("stream_value_histogram", q_stream_value_histogram),
+        "hits_hub_authority": memo("hits_hub_authority", pipeline.hits_hub_authority),
+        "stream_value_histogram": memo("stream_value_histogram", q_stream_value_histogram),
         "ann_sq8_topk": q_ann_sq8_topk,
         "ab_test_bh_adjust": relational.ab_test_bh_adjust,
-        "stream_event_entropy": _memo("stream_event_entropy", q_stream_event_entropy),
+        "stream_event_entropy": memo("stream_event_entropy", q_stream_event_entropy),
         "grouping_sets_revenue": relational.grouping_sets_revenue,
         "revenue_range_frame_7d": relational.revenue_range_frame_7d,
         "image_channel_stats": pipeline.image_channel_stats,
         "compaction_roundtrip": q_compaction_roundtrip,
-        "kmeans_price_segments": _memo("kmeans_price_segments", relational.kmeans_price_segments),
+        "kmeans_price_segments": memo("kmeans_price_segments", relational.kmeans_price_segments),
         "jsonl_roundtrip": q_jsonl_roundtrip,
         "hybrid_rank_fusion": q_hybrid_rank_fusion,
         "cube_revenue": relational.cube_revenue,
@@ -2560,7 +2218,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "weighted_sample_docs": pipeline.weighted_sample_docs,
         "snapshot_diff": pipeline.snapshot_diff_report,
         "events_rate_anomaly": relational.events_rate_anomaly,
-        "dedup_cluster_sizes": _memo("dedup_cluster_sizes", pipeline.dedup_cluster_sizes),
+        "dedup_cluster_sizes": memo("dedup_cluster_sizes", pipeline.dedup_cluster_sizes),
         "token_fertility_by_lang": pipeline.token_fertility_by_lang,
         "orders_profile": q_orders_profile,
         "profit_by_nation_year": relational.profit_by_nation_year,
@@ -2573,7 +2231,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_vocab_usage": pipeline.bpe_vocab_usage,
         "bpe_learned_fertility": pipeline.bpe_learned_fertility,
         "rag_retrieve": pipeline.rag_retrieve,
-        "lpa_communities": _memo("lpa_communities", pipeline.lpa_communities),
+        "lpa_communities": memo("lpa_communities", pipeline.lpa_communities),
         "bigram_pmi": pipeline.bigram_pmi,
         "events_robust_outliers": relational.events_robust_outliers,
         "orders_profile_approx": q_orders_profile_approx,

@@ -403,10 +403,10 @@ def main() -> None:
             analysis (forced via .schema); exec = physical planning +
             execution + fetch. Sub-second queries are dominated by the
             analysis half (~1 s of driver-side work independent of data
-            volume — the _ANN_REPORT_CACHE lesson), which is per-PLAN cost
-            that amortizes over reuse on a real deployment; splitting the
-            two makes the regression gate compare the part that scales with
-            data (r7 verdict ask #5)."""
+            volume — why the ANN reports are artifacts.prepared plans),
+            which is per-PLAN cost that amortizes over reuse on a real
+            deployment; splitting the two makes the regression gate compare
+            the part that scales with data (r7 verdict ask #5)."""
             nonlocal rows
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)

@@ -22,6 +22,8 @@ stages natively as Catalyst logical plans built with the DataFrame API:
 - ``operators.ivf``      — IVF-style ANN layout (KMeans centroids + partition
                            pruning), the numCandidates/nprobe recall dial
 - ``streaming``          — Structured Streaming variants of the batch operators
+- ``artifacts``          — the one registry of per-sf_dir prepared state the
+                           declared queries build once and reuse
 - ``plans.api``          — the reference's public query API (mode validation,
                            limit clamping, response shaping;
                            reference backend/api.py:98-146)

@@ -26,8 +26,8 @@ up, which is exact) so the DuckDB oracle — which computes in DOUBLE — agrees
 
 Scale note: these expressions are the *exact* path, fine at any scale where a
 full scan is acceptable (a per-row projection, no shuffle). For 100 TB ANN
-serving, combine with operators.ivf partition pruning, or swap the kernel for
-the NumPy matmul Pandas UDF in operators.knn.knn_scores_numpy.
+serving, combine with operators.ivf partition pruning or one of the other
+approximate layouts in operators/ (lsh_ann, pq, sq, ivfpq, nndescent).
 """
 
 from __future__ import annotations

@@ -34,7 +34,6 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -52,36 +51,6 @@ def clamp_limit(k: int | None) -> int:
     return max(1, min(int(k), MAX_LIMIT))
 
 
-def knn_scores_numpy(
-    query_vector: Sequence[float], metric: str = "cosine", round_dp: int | None = 6
-):
-    """Vectorized scoring kernel: Arrow batch of vectors → Atlas scores via
-    NumPy (BLAS matvec per batch). Same math as functions.vector.atlas_score;
-    use for wide vectors / big scans where per-element Catalyst lambda
-    evaluation becomes the bottleneck (SURVEY.md §4.3.1)."""
-    import numpy as np
-
-    q = np.asarray(list(query_vector), dtype=np.float64)
-
-    @F.pandas_udf("double")
-    def _score(vs: pd.Series) -> pd.Series:
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        if metric == "cosine":
-            denom = np.linalg.norm(m, axis=1) * np.linalg.norm(q)
-            s = (1.0 + (m @ q) / np.maximum(denom, 1e-300)) / 2.0
-        elif metric == "dotProduct":
-            s = (1.0 + m @ q) / 2.0
-        elif metric == "euclidean":
-            s = 1.0 / (1.0 + np.linalg.norm(m - q, axis=1))
-        else:
-            raise ValueError(f"unknown metric {metric!r}")
-        if round_dp is not None:
-            s = np.round(s, round_dp)
-        return pd.Series(s)
-
-    return _score
-
-
 def knn(
     df: DataFrame,
     query_vector: Sequence[float] | Column,
@@ -94,7 +63,6 @@ def knn(
     score_col: str = "score",
     round_dp: int | None = 6,
     clamp: bool = True,
-    kernel: str = "expr",
     expected_dim: int | None = None,
     norm_col: str | None = None,
 ) -> DataFrame:
@@ -106,9 +74,7 @@ def knn(
     semantics, which is *stronger* than post-filtering (always k results when
     k matches exist).
 
-    ``kernel="expr"`` scores with JVM higher-order functions (no Python
-    anywhere); ``kernel="numpy"`` swaps in the Arrow-batched BLAS kernel —
-    same scores, faster for wide vectors / large scans.
+    Scores with JVM higher-order functions (no Python anywhere).
 
     Cosine only: ``norm_col`` names a column of ``df`` holding each row's
     precomputed ``norm(vector_col)``, which saves one pass over every vector;
@@ -138,14 +104,9 @@ def knn(
             df = df.withColumn(norm_col, norm(F.col(vector_col)))
         row_norm = F.col(norm_col)
         df = df.where(row_norm > 0)
-    if kernel == "numpy":
-        if isinstance(query_vector, Column):
-            raise ValueError("numpy kernel needs a literal query vector")
-        score = knn_scores_numpy(query_vector, metric, round_dp)(F.col(vector_col))
-    else:
-        score = atlas_score(F.col(vector_col), query_vector, metric, row_norm)
-        if round_dp is not None:
-            score = F.round(score, round_dp)
+    score = atlas_score(F.col(vector_col), query_vector, metric, row_norm)
+    if round_dp is not None:
+        score = F.round(score, round_dp)
     out_cols = [c for c in df.columns if c not in (vector_col, norm_col)]
     return (
         df.withColumn(score_col, score)

@@ -9,9 +9,9 @@ min/max skipping all apply automatically once the plan is declarative.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
+
+from .. import artifacts
 
 TABLES = (
     "region",
@@ -26,47 +26,36 @@ TABLES = (
     "embeddings",
 )
 
-# Per-(sf_dir, table, file identity) parquet schema cache (r13 optimization,
-# guide §1/§6): schema inference re-reads the parquet footer on EVERY
-# spark.read.parquet call (~0.14 s of driver-side analysis per call vs
-# ~0.03 s with an explicit schema — measured at sf0.1). A deployment reads
-# through a catalog whose schemas are known; this cache is that catalog. It
-# holds METADATA only — every query still scans the parquet data itself.
-# The key includes the file's (mtime_ns, size) (r14 advice): an in-place
-# rewrite of the parquet during one process (regenerated testdata, a test
-# reusing a dir) re-infers instead of replaying a stale schema, which could
-# silently misread the new file. For a directory-backed table the stat
-# covers entry add/remove; rotated sf_dir paths re-key as before.
-_SCHEMA_CACHE: dict[tuple, "object"] = {}
-
-
-def _file_identity(path: str) -> tuple:
-    try:
-        st = os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (None, None)
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata table. Keep this lazy — no .cache(), no .count() —
-    so Catalyst can push query-specific filters/projections into the scan."""
+    so Catalyst can push query-specific filters/projections into the scan.
+
+    The parquet schema is an artifact (``schema_<name>``): inference re-reads
+    the footer on every spark.read.parquet call (~0.14 s of driver-side
+    analysis vs ~0.03 s with an explicit schema, measured at sf0.1), so it is
+    inferred once per sf_dir and input identity, the way a deployment reads
+    through a catalog whose schemas are known. It holds metadata only; every
+    query still scans the data itself."""
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     path = f"{sf_dir}/{name}.parquet"
-    key = (sf_dir, name, _file_identity(path))
-    cached = _SCHEMA_CACHE.get(key)
-    if cached is not None:
-        df = spark.read.schema(cached).parquet(path)
-        return _normalize_ts(df) if name == "events" else df
-    if name == "events":
-        df, plain = _read_events(spark, path)
-        if plain:  # only the no-fallback path is safe to replay from a schema
-            _SCHEMA_CACHE[key] = df.schema
-        return _normalize_ts(df)
-    df = spark.read.parquet(path)
-    _SCHEMA_CACHE[key] = df.schema
-    return df
+    schema = artifacts.get(
+        spark, f"schema_{name}", sf_dir, lambda: _infer_schema(spark, path, name)
+    )
+    if schema is None:  # nanos fallback: its conf window must rerun per read
+        return _normalize_ts(_read_events(spark, path)[0])
+    df = spark.read.schema(schema).parquet(path)
+    return _normalize_ts(df) if name == "events" else df
+
+
+def _infer_schema(spark: SparkSession, path: str, name: str):
+    """The table's inferred schema, or None when only the events nanos
+    fallback can read it (such a scan cannot be replayed from a schema)."""
+    if name != "events":
+        return spark.read.parquet(path).schema
+    df, plain = _read_events(spark, path)
+    return df.schema if plain else None
 
 
 def _read_events(spark: SparkSession, path: str):

@@ -1,10 +1,12 @@
-"""r13 optimization measurement helper.
+"""Optimization measurement helper.
 
-For each named query: capture .explain('formatted') to plans/r13/<q>_<tag>.txt
-and time the exec half (schema-forced build excluded) with the noop sink per
-guide §1.4 — N runs, min reported. Solo use only (contends for all cores).
+For each named query: capture .explain('formatted') to
+plans/<round>/<q>_<tag>.txt and time the exec half (schema-forced build
+excluded) with the noop sink per guide §1.4 — N runs, min reported. Solo use
+only (contends for all cores).
 
-Usage: python scripts/measure_r13.py <tag> <query> [<query> ...]
+Usage: python scripts/measure.py <round> <tag> <query> [<query> ...]
+       e.g. python scripts/measure.py r15 before fulltext_bm25
        SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS honored as in bench.py.
 """
 
@@ -15,30 +17,40 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+
+USAGE = "usage: python scripts/measure.py <round> <tag> <query> [<query> ...]"
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    import __spark_entry__ as entry_mod
+
+    qs = entry_mod.queries()
+    unknown = [n for n in sys.argv[3:] if n not in qs]
+    if len(sys.argv) < 4 or unknown:
+        if unknown:
+            print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
+        print(USAGE, file=sys.stderr)
+        print("known queries:\n  " + "\n  ".join(sorted(qs)), file=sys.stderr)
+        sys.exit(2)
+    rnd, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
-    import __spark_entry__ as entry_mod
     from hybrid_vector_search_spark.session import get_spark
 
-    spark = get_spark("measure-r13")
+    spark = get_spark(f"measure-{rnd}")
     spark.range(1).count()
     spark.range(256).repartition(32).mapInPandas(
         lambda it: (pdf for pdf in it), "id long"
     ).count()
 
-    qs = entry_mod.queries()
-    outdir = Path(__file__).resolve().parent.parent / "plans" / "r13"
+    outdir = REPO / "plans" / rnd
     outdir.mkdir(parents=True, exist_ok=True)
     for name in names:
         fn = qs[name]
-        spark.sparkContext.setJobDescription(f"r13-measure {name}")
+        spark.sparkContext.setJobDescription(f"{rnd}-measure {name}")
         # warm (absorbs first-touch/codegen; matches bench min-of-n semantics)
         df = fn(spark, sf_dir)
         plan = df._jdf.queryExecution().explainString(
@@ -66,7 +78,7 @@ def main() -> None:
         n_reuse = plan.count("ReusedExchange")
         print(
             f"{name}: e2e {best_e2e:.3f}s exec {best_exec:.3f}s noop {best_noop:.3f}s"
-            f" | Exchange {n_ex} (reused {n_reuse}) | plan -> plans/r13/{name}_{tag}.txt",
+            f" | Exchange {n_ex} (reused {n_reuse}) | plan -> plans/{rnd}/{name}_{tag}.txt",
             flush=True,
         )
         spark.sparkContext.setJobDescription(None)

@@ -74,20 +74,19 @@ def test_events_nanos_encoding_fallback(spark, tmp_path):
 
 
 def test_schema_cache_matches_inference(spark):
-    """r13: load_table caches each table's parquet schema per (sf_dir, name,
-    file identity) so repeated loads skip footer re-inference. The cached-path
-    DataFrame must be schema- and content-identical to a fresh inference."""
-    from hybrid_vector_search_spark.sources import loaders
+    """r13: load_table keeps each table's parquet schema as an artifact per
+    (sf_dir, input identity) so repeated loads skip footer re-inference. The
+    cached-path DataFrame must be schema- and content-identical to a fresh
+    inference."""
+    from hybrid_vector_search_spark import artifacts
 
     for name in ("lineitem", "events"):
-        key = (
-            SF_SMALL,
-            name,
-            loaders._file_identity(f"{SF_SMALL}/{name}.parquet"),
-        )
-        loaders._SCHEMA_CACHE.pop(key, None)
+        kind = f"schema_{name}"
+        artifacts._entries.pop(kind, None)
         first = load_table(spark, SF_SMALL, name)  # populates the cache
-        assert key in loaders._SCHEMA_CACHE
+        entry = artifacts._entries[kind]
+        assert entry.sf_dir == SF_SMALL
+        assert entry.identity == artifacts.input_identity(SF_SMALL)
         second = load_table(spark, SF_SMALL, name)  # served from the cache
         assert second.schema == first.schema
         fresh = spark.read.parquet(f"{SF_SMALL}/{name}.parquet")
@@ -105,7 +104,7 @@ def test_schema_cache_skipped_on_nanos_fallback(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from hybrid_vector_search_spark.sources import loaders
+    from hybrid_vector_search_spark import artifacts
 
     sf_dir = str(tmp_path)
     table = pa.table(
@@ -119,17 +118,18 @@ def test_schema_cache_skipped_on_nanos_fallback(spark, tmp_path):
     bare.conf.set("spark.sql.session.timeZone", "UTC")
     df = load_table(bare, sf_dir, "events")
     assert isinstance(df.schema["ts"].dataType, T.TimestampType)
-    assert not any(k[0] == sf_dir and k[1] == "events" for k in loaders._SCHEMA_CACHE)
+    # the entry for this sf_dir holds no schema to replay
+    entry = artifacts._entries["schema_events"]
+    assert entry.sf_dir == sf_dir and entry.value is None
 
 
 def test_schema_cache_reinfers_after_inplace_rewrite(spark, tmp_path):
-    """r14 advice: the cache key carries the file's (mtime_ns, size), so a
-    parquet rewritten IN PLACE during one process re-infers instead of
-    replaying the stale schema (which could silently misread the new file)."""
+    """r14 advice: the artifact's input identity carries the file's
+    (mtime_ns, size), so a parquet rewritten IN PLACE during one process
+    re-infers instead of replaying the stale schema (which could silently
+    misread the new file)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from hybrid_vector_search_spark.sources import loaders
 
     sf_dir = str(tmp_path)
     path = f"{sf_dir}/part.parquet"

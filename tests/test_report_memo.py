@@ -1,4 +1,4 @@
-"""__spark_entry__._memo: materialize-once wrapper for expensive builders."""
+"""artifacts.memo: materialize-once wrapper for expensive builders."""
 
 from __future__ import annotations
 
@@ -21,12 +21,14 @@ def test_memo_second_call_equals_raw_builder(spark):
 
 def test_memo_evicts_other_sf_dirs(spark):
     import __spark_entry__ as e
+    from hybrid_vector_search_spark import artifacts
 
-    e._REPORT_MEMO.clear()
+    artifacts._entries.pop("memo_dedup_components", None)
     wrapped = e.queries()["dedup_components"]
     wrapped(spark, SF)
-    assert ("dedup_components", SF) in e._REPORT_MEMO
+    assert artifacts._entries["memo_dedup_components"].sf_dir == SF
     other = "/root/testdata/sf0.01"
     wrapped(spark, other)
-    assert ("dedup_components", SF) not in e._REPORT_MEMO
-    assert ("dedup_components", other) in e._REPORT_MEMO
+    # one entry per kind: the other sf_dir's build replaced the SF entry
+    assert artifacts._entries["memo_dedup_components"].sf_dir != SF
+    assert artifacts._entries["memo_dedup_components"].sf_dir == other
