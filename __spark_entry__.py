@@ -454,24 +454,20 @@ def _orders_exact_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@artifacts.prepared("profile_exact")
-def q_orders_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return artifacts.materialize(
-        spark, "profile_exact", sf_dir,
-        relational.orders_profile(
-            spark, sf_dir, exact_agg=_orders_exact_agg(spark, sf_dir)
-        ),
+def _orders_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return relational.orders_profile(
+        spark, sf_dir, exact_agg=_orders_exact_agg(spark, sf_dir)
     )
 
 
-@artifacts.prepared("profile_attest")
-def q_orders_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return artifacts.materialize(
-        spark, "profile_attest", sf_dir,
-        relational.orders_profile_approx(
-            spark, sf_dir, exact_agg=_orders_exact_agg(spark, sf_dir)
-        ),
+def _orders_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return relational.orders_profile_approx(
+        spark, sf_dir, exact_agg=_orders_exact_agg(spark, sf_dir)
     )
+
+
+q_orders_profile = artifacts.memo("orders_profile", _orders_profile)
+q_orders_profile_approx = artifacts.memo("orders_profile_approx", _orders_profile_approx)
 
 
 def _ann_eval_queries(spark: SparkSession, sf_dir: str):
@@ -916,14 +912,12 @@ def _staged(
     return artifacts.get(spark, kind, sf_dir, build)
 
 
-def _staged_events(
-    spark: SparkSession, kind: str, sf_dir: str, cols: list[str], n_files: int = 4
-) -> str:
-    """events[cols] staged as ``n_files`` parquet files."""
+def _staged_events(spark: SparkSession, kind: str, sf_dir: str, cols: list[str]) -> str:
+    """events[cols] staged as 4 parquet files."""
     return _staged(
         spark, kind, sf_dir,
         lambda src: load_table(spark, sf_dir, "events").select(*cols)
-        .repartition(n_files).write.mode("overwrite").parquet(src),
+        .repartition(4).write.mode("overwrite").parquet(src),
     )
 
 

@@ -14,6 +14,10 @@ policy:
   that sf_dir's table files, and the SparkContext's ``applicationId`` all
   match, so a rewritten input or a new SparkContext (whose checkpoints and
   cached blocks are gone) rebuilds instead of replaying stale state;
+- an entry also records the DataFrame-holding entries its build read (an
+  ANN report's plan reads the cached corpus and exact ground truth). Once
+  one of those is replaced, and so released, the entry misses too: its plan
+  would otherwise rescan and recompute what the released entry had cached;
 - every build is timed and logged, so a cold call shows what it built.
 
 Files (parquet reports, staged sources, index layouts) go under one session
@@ -42,9 +46,11 @@ class _Entry(NamedTuple):
     identity: tuple
     app_id: str
     value: Any
+    deps: tuple  # (kind, _Entry) of each DataFrame-holding entry the build read
 
 
 _entries: dict[str, _Entry] = {}
+_building: list[list] = []  # per build in progress, the deps it has read so far
 
 
 def input_identity(sf_dir: str) -> tuple:
@@ -72,34 +78,51 @@ def input_identity(sf_dir: str) -> tuple:
     return tuple(out)
 
 
-def release(value: Any) -> None:
-    """Unpersist every DataFrame an artifact holds: the value itself, the items
-    of a tuple or list, or the fields of a dataclass (e.g. bm25.TextStats)."""
+def _frames(value: Any):
+    """The DataFrames an artifact holds: the value itself, the items of a
+    tuple or list, or the fields of a dataclass (e.g. bm25.TextStats)."""
     if isinstance(value, DataFrame):
-        value.unpersist()
+        yield value
     elif isinstance(value, (tuple, list)):
         for item in value:
-            release(item)
+            yield from _frames(item)
     elif dataclasses.is_dataclass(value) and not isinstance(value, type):
         for field in dataclasses.fields(value):
-            release(getattr(value, field.name))
+            yield from _frames(getattr(value, field.name))
+
+
+def release(value: Any) -> None:
+    """Unpersist every DataFrame an artifact holds."""
+    for df in _frames(value):
+        df.unpersist()
+
+
+def _current(entry: _Entry) -> bool:
+    """Whether every entry ``entry``'s build read is still the held one."""
+    return all(_entries.get(kind) is dep and _current(dep) for kind, dep in entry.deps)
 
 
 def get(spark: SparkSession, kind: str, sf_dir: str, build: Callable[[], Any]) -> Any:
     """The ``kind`` artifact for ``sf_dir``: the held entry when its sf_dir,
-    input identity and applicationId match, else ``build()``'s result, which
-    replaces (and releases) the kind's previous entry."""
+    input identity and applicationId match and the entries its build read
+    are still held, else ``build()``'s result, which replaces (and releases)
+    the kind's previous entry."""
     key = (sf_dir, input_identity(sf_dir), spark.sparkContext.applicationId)
     entry = _entries.get(kind)
-    if entry is not None:
-        if entry[:3] == key:
-            return entry.value
-        del _entries[kind]
-        release(entry.value)
-    with timed(get_logger("artifacts"), f"artifact {kind} build for {sf_dir}"):
-        value = build()
-    _entries[kind] = _Entry(*key, value)
-    return value
+    if entry is None or entry[:3] != key or not _current(entry):
+        if entry is not None:
+            del _entries[kind]
+            release(entry.value)
+        _building.append([])
+        try:
+            with timed(get_logger("artifacts"), f"artifact {kind} build for {sf_dir}"):
+                value = build()
+        finally:
+            deps = _building.pop()
+        entry = _entries[kind] = _Entry(*key, value, tuple(deps))
+    if _building and any(True for _ in _frames(entry.value)):
+        _building[-1].append((kind, entry))
+    return entry.value
 
 
 @functools.cache

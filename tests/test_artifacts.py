@@ -92,6 +92,34 @@ def test_inplace_rewrite_rebuilds(registry, tmp_path, backing):
     assert registry.get(spark, "k", sf_dir, build) is second
 
 
+def test_entry_misses_once_a_frame_it_read_is_replaced(registry, spark, tmp_path):
+    """A report whose plan reads a cached corpus must not outlive that corpus:
+    once another sf_dir's lookup replaces (and unpersists) the corpus, the
+    report rebuilds over the current one. A read entry holding no DataFrame
+    (a schema, a staged path) is not a dependency."""
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    os.mkdir(a)
+    os.mkdir(b)
+
+    def report(sf_dir):
+        return registry.get(spark, "report", sf_dir, lambda: (
+            registry.get(spark, "schema", sf_dir, lambda: f"schema of {sf_dir}"),
+            registry.get(spark, "corpus", sf_dir, lambda: spark.range(3).cache()),
+        ))
+
+    first = report(a)
+    assert report(a) is first
+    registry.get(spark, "schema", b, lambda: f"schema of {b}")
+    assert report(a) is first
+    registry.get(spark, "corpus", b, lambda: spark.range(3).cache())
+    assert not first[1].is_cached  # released with the corpus entry it read
+    second = report(a)
+    assert second is not first
+    assert second[1] is registry._entries["corpus"].value
+    assert second[1].is_cached
+    assert report(a) is second
+
+
 def test_release_unpersists_nested_dataframes(spark):
     from hybrid_vector_search_spark import artifacts
     from hybrid_vector_search_spark.operators.bm25 import TextStats
@@ -145,6 +173,28 @@ def test_rotation_returns_same_answer(spark, sf_link, name):
     assert _rows(fn(spark, sf_link)) == first  # same data, new sf_dir
     assert any(x.sf_dir == sf_link for x in artifacts._entries.values())
     assert _rows(fn(spark, SF_SMALL)) == first
+
+
+def test_ann_report_follows_its_corpus_across_sf_dirs(spark, sf_link):
+    """ivf at sf0.001, lsh at another sf_dir, ivf at sf0.001 again: the lsh
+    run replaces the shared ANN corpus, so the ivf report must be rebuilt
+    over the re-cached corpus rather than returned with a plan over the
+    released one."""
+    import __spark_entry__ as e
+    from hybrid_vector_search_spark import artifacts
+
+    qs = e.queries()
+    first = qs["ann_ivf_topk"](spark, SF_SMALL)
+    rows = _rows(first)
+    qs["ann_lsh_topk"](spark, sf_link)
+    assert artifacts._entries["ann_corpus"].sf_dir == sf_link
+    again = qs["ann_ivf_topk"](spark, SF_SMALL)
+    assert again is not first
+    corpus = artifacts._entries["ann_corpus"]
+    assert corpus.sf_dir == SF_SMALL and corpus.value.is_cached
+    assert dict(artifacts._entries["ann_report_ivf"].deps)["ann_corpus"] is corpus
+    assert _rows(again) == rows
+    assert qs["ann_ivf_topk"](spark, SF_SMALL) is again
 
 
 def _empty_container(node: ast.AST | None) -> bool:
