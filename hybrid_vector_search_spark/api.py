@@ -146,12 +146,13 @@ class SearchEngine:
         eager: bool = True,
     ):
         """``eager=True`` (default, the serving trade): build the indexes at
-        construction — persist the corpus-global text statistics and the
-        per-row vector norms, check that ids are unique, and read the corpus
-        vector dimensionality — so a bad corpus fails at startup, not on the
-        first query. ``eager=False`` defers each of these to its first use,
-        for batch composition where an engine may be constructed (e.g. per
-        table in a catalog sweep) without ever serving a query."""
+        construction — persist the corpus-global text statistics, the
+        per-row vector norms and the fulltext impact table, check that ids
+        are unique, and read the corpus vector dimensionality — so a bad
+        corpus fails at startup, not on the first query. ``eager=False``
+        defers each of these to its first use, for batch composition where
+        an engine may be constructed (e.g. per table in a catalog sweep)
+        without ever serving a query."""
         if compat not in COMPAT_MODES:
             raise ValueError(f"compat must be one of {sorted(COMPAT_MODES)}, got {compat!r}")
         self.df = df
@@ -160,11 +161,13 @@ class SearchEngine:
         self.embedder = embedder or HashingEmbedder()
         self._stats_cache = None
         self._norm_corpus: DataFrame | None = None
+        self._text_table: DataFrame | None = None
         self._dim_cache: int | None = None
         self._dim_known = False
         if eager:
             self._build_norms()
             self._build_stats()
+            self._build_text_table()
             self._read_dim()
 
     def _build_stats(self):
@@ -178,6 +181,21 @@ class SearchEngine:
                 self.df, self.cfg.id_col, self.cfg.title_col
             ).persist()
         return self._stats_cache
+
+    def _build_text_table(self) -> DataFrame:
+        """The fulltext serving table: the corpus without its embedding, with
+        each document's BM25 term weights (``bm25_op.impact_table``), so that
+        a fulltext request is one scan with no join. Built from the persisted
+        text statistics, which the hybrid path keeps reading."""
+        if self._text_table is None:
+            table = bm25_op.impact_table(
+                self.df.drop(self.cfg.emb_col), self._stats, self.cfg.id_col
+            )
+            # eager localCheckpoint, not persist(): it cuts the lineage, so
+            # the table holds no reference to the build plan, whose broadcast
+            # relations a persisted plan keeps alive on the heap
+            self._text_table = table.localCheckpoint(eager=True)
+        return self._text_table
 
     def _build_norms(self) -> DataFrame:
         """The corpus with each row's ``norm(embedding)`` in column ``_NORM``,
@@ -363,13 +381,11 @@ class SearchEngine:
         return self._knn(description, limit, pre_filter).select(*self._project_cols(), "score")
 
     def _fulltext(self, title_value: str, limit: int, *, residual: Column | None) -> DataFrame:
-        out = bm25_op.fulltext(
-            self.df,
+        out = bm25_op.impact_fulltext(
+            self._build_text_table(),
             title_value,
             limit,
             id_col=self.cfg.id_col,
-            text_col=self.cfg.title_col,
-            stats=self._stats,
             residual_filter=residual,
         )
         return out.select(*self._project_cols(), "score")

@@ -26,16 +26,30 @@ Scale design:
   indexes.py step): one explode + two groupBys over the corpus, written once
   and reused by every query. At 100 TB this is the only corpus-sized shuffle,
   and it is amortized across all queries.
-- Query-time work is proportional to |postings of query terms|, not corpus
-  size: the postings table is filtered to the query's terms FIRST (predicate
-  pushdown into the postings scan when stats are persisted as parquet
-  partitioned/bucketed by term), then joined with the tiny per-term df table
-  (broadcast) and the per-doc length table.
+- Two query paths read the index:
+  - ``bm25_scores`` / ``fulltext`` (hybrid search's text branch and the
+    262-query bench): work is proportional to |postings of query terms|, not
+    corpus size. The postings table is filtered to the query's terms FIRST
+    (predicate pushdown into the postings scan when stats are persisted as
+    parquet partitioned/bucketed by term), then joined with the tiny per-term
+    df table (broadcast) and the per-doc length table.
+  - ``impact_table`` / ``impact_fulltext`` (the search engine's fulltext
+    mode): N, avgdl and df are fixed at build, so every (doc, term) weight is
+    a constant — pre-computed impacts (Anh & Moffat, SIGIR 2006). The build
+    stores them per document as a ``map<term, double>`` next to the corpus
+    columns; a request is then one scan, one filter and one top-k, with no
+    join and no shuffle. The caveat: a forward map makes a request
+    O(corpus), and each map lookup is linear in the document's distinct
+    terms, where postings are O(postings of the query terms). That is the
+    right trade for short titles over thousands of rows (the paper's 5.4k
+    products); at hundreds of thousands of rows, measure both.
 - No Python UDFs anywhere — the whole scorer is codegen'd expressions.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -96,6 +110,16 @@ def build_text_stats(df: DataFrame, id_col: str, text_col: str) -> TextStats:
     return TextStats(postings, doc_len, doc_freq, corpus)
 
 
+def _weight(k1: float, b: float) -> Column:
+    """One (doc, term) BM25 weight, idf(t)·tf·(k1+1)/(tf+norm(d)), over the
+    columns ``n``, ``avgdl`` (corpus), ``df`` (term), ``dl`` (doc) and ``tf``."""
+    idf = F.log(F.lit(1.0) + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
+    tf_part = (F.col("tf") * (k1 + 1.0)) / (
+        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
+    )
+    return idf * tf_part
+
+
 def bm25_scores(
     stats: TextStats,
     query_terms: list[str],
@@ -111,17 +135,13 @@ def bm25_scores(
     """
     terms = sorted(set(query_terms))
     qt = F.col("term").isin(terms)
-    idf = F.log(F.lit(1.0) + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tf_part = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    )
     scored = (
         stats.postings.where(qt)
         .join(F.broadcast(stats.doc_freq.where(qt)), "term")
         .join(stats.doc_len, "id")
         .crossJoin(F.broadcast(stats.corpus))
         .groupBy("id")
-        .agg(F.sum(idf * tf_part).alias("_score"))
+        .agg(F.sum(_weight(k1, b)).alias("_score"))
     )
     out = F.col("_score") if round_dp is None else F.round(F.col("_score"), round_dp)
     return scored.select("id", out.alias("score"))
@@ -151,6 +171,48 @@ def fulltext(
         "id", "__bm25_id"  # corpus may legitimately have its own `id` column
     )
     out = df.join(scores, F.col(id_col) == F.col("__bm25_id"), "inner").drop("__bm25_id")
+    if residual_filter is not None:
+        out = out.where(residual_filter)
+    return out.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+
+
+IMPACTS = "__impacts"  # impact_table's map<term, double> column
+
+
+def impact_table(df: DataFrame, stats: TextStats, id_col: str) -> DataFrame:
+    """``df`` with column ``IMPACTS``: each document's BM25 weight per term,
+    ``_weight(K1, B)`` exactly as ``bm25_scores`` computes it from ``stats``.
+
+    The per-document maps are broadcast into ``df``, so the table keeps
+    ``df``'s partitioning. Documents without a token are dropped: they match
+    no query. ``df``'s ids must be unique."""
+    impacts = (
+        stats.postings.join(F.broadcast(stats.doc_freq), "term")
+        .join(stats.doc_len, "id")
+        .crossJoin(F.broadcast(stats.corpus))
+        .groupBy(F.col("id").alias("__impact_id"))  # corpus may have its own `id`
+        .agg(F.map_from_entries(F.collect_list(F.struct("term", _weight(K1, B)))))
+        .toDF("__impact_id", IMPACTS)
+    )
+    return df.join(F.broadcast(impacts), F.col(id_col) == F.col("__impact_id")).drop(
+        "__impact_id"
+    )
+
+
+def impact_fulltext(
+    table: DataFrame, query: str, k: int, *, id_col: str, residual_filter: Column | None
+) -> DataFrame:
+    """``fulltext`` over an ``impact_table``: the documents holding any query
+    term, scored ``round(Σ_t impact(t), 6)`` over the distinct query terms in
+    sorted order, then the residual filter, then the top ``k``.
+
+    For queries of at most two distinct terms the scores equal
+    ``bm25_scores``' bit for bit; beyond that its hash aggregate may add
+    the same terms in another order (last-place differences)."""
+    weights = [F.col(IMPACTS)[t] for t in sorted(set(_py_tokens(query)))]
+    matched = functools.reduce(operator.or_, [w.isNotNull() for w in weights], F.lit(False))
+    score = functools.reduce(operator.add, [F.coalesce(w, F.lit(0.0)) for w in weights], F.lit(0.0))
+    out = table.where(matched).withColumn("score", F.round(score, 6)).drop(IMPACTS)
     if residual_filter is not None:
         out = out.where(residual_filter)
     return out.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
@@ -199,9 +261,13 @@ def rm3_scores(
     # from these two localCheckpoints alone). Both relations are small —
     # |matched docs| rows and fb_terms rows — the classic materialize-the-
     # feedback-model step of any RM3 implementation (guide §3.3).
-    # eager=False (r14): the checkpoint still materializes exactly once,
-    # but at the first action instead of at DataFrame-construction time,
-    # so the job stays inside the caller's timed execution window.
+    # eager=False defers only each checkpoint's final stage to the first
+    # action. Building the checkpoint's RDD executes the physical plan
+    # below it: every adaptive query stage (shuffle map stages and
+    # broadcasts; the broadcasts also with AQE off). So this function
+    # launches Spark jobs while it builds its DataFrame (statusTracker, at
+    # sf0.001): 4 for ``base`` and 3 for ``topt`` on a warm index, and 14
+    # for ``base`` when it also materialises a cold index.
     base = bm25_scores(stats, q_terms, k1=k1, b=b, round_dp=6).localCheckpoint(
         eager=False
     )
@@ -229,10 +295,6 @@ def rm3_scores(
         (F.col("wdec").cast("double") / F.col("t").cast("double")).alias("what"),
     )
     # --- expanded pass: ŵ_t · per-term BM25 over the full postings
-    idf = F.log(F.lit(1.0) + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tf_part = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    )
     exp_scores = (
         stats.postings.join(F.broadcast(what), "term")
         .join(F.broadcast(stats.doc_freq.join(what.select("term"), "term")), "term")
@@ -240,7 +302,7 @@ def rm3_scores(
         .crossJoin(F.broadcast(stats.corpus))
         .select(
             "id",
-            F.round(F.col("what") * (idf * tf_part), 9)
+            F.round(F.col("what") * _weight(k1, b), 9)
             .cast("decimal(18,9)")
             .alias("e"),
         )

@@ -300,6 +300,68 @@ def test_duplicate_ids_rejected_at_build(spark):
             lazy.search(payload)
 
 
+def _assert_fulltext_parity(eng, corpus, title, extra, ref_filter):
+    """The engine's fulltext results equal ``bm25.fulltext`` over the same
+    corpus and freshly built statistics: the same ids in the same order, and
+    the same scores (exactly, for at most two distinct query terms, whose
+    sum does not depend on the order of addition)."""
+    from hybrid_vector_search_spark.operators import bm25
+
+    cfg = eng.cfg
+    limit = extra.get("limit", 5)
+    got = eng.search({"mode": "fulltext", "title": title, **extra})["results"]
+    ref = bm25.fulltext(
+        corpus,
+        title,
+        limit,
+        id_col=cfg.id_col,
+        text_col=cfg.title_col,
+        stats=bm25.build_text_stats(corpus, cfg.id_col, cfg.title_col),
+        residual_filter=ref_filter,
+    ).collect()
+    assert [r[cfg.id_col] for r in got] == [str(r[cfg.id_col]) for r in ref]
+    scores, ref_scores = [r["score"] for r in got], [r.score for r in ref]
+    if len(set(bm25._py_tokens(title))) <= 2:
+        assert scores == ref_scores
+    else:
+        assert scores == pytest.approx(ref_scores, abs=1e-6)
+    return got
+
+
+@pytest.mark.parametrize(
+    "title, extra, ref_filter",
+    [
+        ("spark spark", {"limit": 25}, None),
+        ("SpArK, fast!", {"limit": 25}, None),
+        ("spark zzzunseen", {"limit": 25}, None),
+        ("!!!", {"limit": 25}, None),
+        ("spark fast", {"restaurant": "src3", "limit": 25}, lambda: F.col("source") == "src3"),
+        ("join window", {"maxPrice": 500, "limit": 25}, lambda: F.col("n_chars") < 500.0),
+        ("spark fast table value", {"limit": 25}, None),
+        ("table", {}, None),
+    ],
+)
+def test_engine_fulltext_matches_bm25_fulltext(engine, title, extra, ref_filter):
+    got = _assert_fulltext_parity(
+        engine, engine.df, title, extra, ref_filter() if ref_filter else None
+    )
+    assert (len(got) == 0) == (title == "!!!")
+
+
+def test_engine_fulltext_matches_bm25_fulltext_tiny(spark):
+    from hybrid_vector_search_spark.api import SearchConfig, SearchEngine
+
+    corpus, embedder = _tiny_corpus(
+        spark,
+        [(1, "Red apple", "red apple"), (2, "green pear", "green pear"),
+         (3, "red pear, ripe red pear", "ripe red pear"), (4, "", "blank"),
+         (5, "apple pie", "apple pie")],
+    )
+    eng = SearchEngine(corpus, SearchConfig(), embedder=embedder)
+    for title in ("apple apple", "RED; pear", "kiwi", "!!!", "red green pear apple"):
+        _assert_fulltext_parity(eng, corpus, title, {"limit": 25}, None)
+
+
 # ------------------------------------------------------------ HTTP binding
 
 

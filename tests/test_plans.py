@@ -70,6 +70,33 @@ def test_engine_vector_plan_broadcasts_norm_index(spark):
         assert score.count("aggregate(") == 1 and "__norm" in score, score
 
 
+def test_engine_fulltext_plan_is_one_scan(spark):
+    """The engine's fulltext search scores its impact table in one scan: a
+    top-k heap with no join and no exchange of any kind, and one Spark job
+    per request."""
+    from hybrid_vector_search_spark.api import SearchConfig, SearchEngine
+    from hybrid_vector_search_spark.operators.embed import embed_documents
+    from hybrid_vector_search_spark.sources import load_table
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    eng = SearchEngine(
+        embed_documents(docs, "text", "emb"),
+        SearchConfig(id_col="doc_id", title_col="text", emb_col="emb", price_col="n_chars"),
+    )
+    for residual in (None, F.col("n_chars") < 500):
+        plan = _plan(eng._fulltext("spark fast table", 5, residual=residual))
+        assert "TakeOrderedAndProject" in plan, plan
+        assert "Exchange" not in plan and "Join" not in plan, plan
+    sc, group = spark.sparkContext, "test-engine-fulltext-plan-is-one-scan"
+    sc.setJobGroup(group, "one fulltext request")
+    try:
+        res = eng.search({"mode": "fulltext", "title": "spark fast table", "limit": 5})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(res["results"]) == 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_dimension_joins_broadcast(spark):
     from hybrid_vector_search_spark.plans.relational import revenue_by_nation
 
