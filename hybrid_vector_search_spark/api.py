@@ -146,13 +146,13 @@ class SearchEngine:
         eager: bool = True,
     ):
         """``eager=True`` (default, the serving trade): build the indexes at
-        construction — persist the corpus-global text statistics, the
-        per-row vector norms and the fulltext impact table, check that ids
-        are unique, and read the corpus vector dimensionality — so a bad
-        corpus fails at startup, not on the first query. ``eager=False``
-        defers each of these to its first use, for batch composition where
-        an engine may be constructed (e.g. per table in a catalog sweep)
-        without ever serving a query."""
+        construction — persist the text index (postings with their BM25
+        weights), the per-row vector norms and the fulltext impact table,
+        check that ids are unique, and read the corpus vector dimensionality
+        — so a bad corpus fails at startup, not on the first query.
+        ``eager=False`` defers each of these to its first use, for batch
+        composition where an engine may be constructed (e.g. per table in a
+        catalog sweep) without ever serving a query."""
         if compat not in COMPAT_MODES:
             raise ValueError(f"compat must be one of {sorted(COMPAT_MODES)}, got {compat!r}")
         self.df = df
@@ -174,7 +174,8 @@ class SearchEngine:
         if self._stats_cache is None:
             self._build_norms()  # BM25 needs unique ids; this checks them
             # "index build": corpus-global text statistics over the FULL
-            # table, computed once and reused by every query (reference
+            # table, and from them each posting's BM25 weight, computed once
+            # and summed by every hybrid query with no join (reference
             # indexes.py is likewise a separate build step; see SURVEY.md
             # §4.2 for why stats must never see a filtered corpus).
             self._stats_cache = bm25_op.build_text_stats(
@@ -184,9 +185,10 @@ class SearchEngine:
 
     def _build_text_table(self) -> DataFrame:
         """The fulltext serving table: the corpus without its embedding, with
-        each document's BM25 term weights (``bm25_op.impact_table``), so that
-        a fulltext request is one scan with no join. Built from the persisted
-        text statistics, which the hybrid path keeps reading."""
+        each document's stored BM25 term weights as a map
+        (``bm25_op.impact_table``), so that a fulltext request is one scan
+        with no join. It regroups the postings' weights, which the hybrid
+        path keeps summing."""
         if self._text_table is None:
             table = bm25_op.impact_table(
                 self.df.drop(self.cfg.emb_col), self._stats, self.cfg.id_col

@@ -9,7 +9,8 @@ reuse it. Every such artifact lives in this module's registry under one
 policy:
 
 - one entry per kind. A lookup that misses releases the kind's previous
-  entry (``release`` unpersists the DataFrames it holds) before building;
+  entry (``release`` unpersists the DataFrames it holds and frees their
+  checkpoints) before building;
 - an entry is reused only while its ``sf_dir``, the ``(mtime_ns, size)`` of
   that sf_dir's table files, and the SparkContext's ``applicationId`` all
   match, so a rewritten input or a new SparkContext (whose checkpoints and
@@ -92,9 +93,14 @@ def _frames(value: Any):
 
 
 def release(value: Any) -> None:
-    """Unpersist every DataFrame an artifact holds."""
+    """Unpersist every DataFrame an artifact holds. ``unpersist`` leaves a
+    ``localCheckpoint``'s blocks in place, so a frame whose plan is an RDD
+    scan (a checkpoint) also unpersists that RDD."""
     for df in _frames(value):
         df.unpersist()
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(True)
 
 
 def _current(entry: _Entry) -> bool:

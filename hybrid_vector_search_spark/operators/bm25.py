@@ -25,24 +25,26 @@ Scale design:
 - ``build_text_stats`` is the "index build" (mirrors the reference's separate
   indexes.py step): one explode + two groupBys over the corpus, written once
   and reused by every query. At 100 TB this is the only corpus-sized shuffle,
-  and it is amortized across all queries.
-- Two query paths read the index:
-  - ``bm25_scores`` / ``fulltext`` (hybrid search's text branch and the
-    262-query bench): work is proportional to |postings of query terms|, not
-    corpus size. The postings table is filtered to the query's terms FIRST
-    (predicate pushdown into the postings scan when stats are persisted as
-    parquet partitioned/bucketed by term), then joined with the tiny per-term
-    df table (broadcast) and the per-doc length table.
-  - ``impact_table`` / ``impact_fulltext`` (the search engine's fulltext
-    mode): N, avgdl and df are fixed at build, so every (doc, term) weight is
-    a constant — pre-computed impacts (Anh & Moffat, SIGIR 2006). The build
-    stores them per document as a ``map<term, double>`` next to the corpus
-    columns; a request is then one scan, one filter and one top-k, with no
-    join and no shuffle. The caveat: a forward map makes a request
-    O(corpus), and each map lookup is linear in the document's distinct
-    terms, where postings are O(postings of the query terms). That is the
-    right trade for short titles over thousands of rows (the paper's 5.4k
-    products); at hundreds of thousands of rows, measure both.
+  and it is amortized across all queries. N, avgdl and df are fixed there, so
+  every (doc, term) weight is a constant — pre-computed impacts (Anh &
+  Moffat, SIGIR 2006): the build computes each posting's weight ``w`` once,
+  and no scorer joins the statistics again.
+- Two layouts of the same stored weights serve queries, neither joining at
+  query time:
+  - postings, ``(id, term, tf, w)`` (``bm25_scores`` / ``fulltext``, hybrid
+    search's text branch, ``rm3_scores`` and the 262-query bench): a query
+    sums ``w`` over the postings of its terms, so its work is proportional to
+    those postings, not to the corpus (predicate pushdown into the postings
+    scan when stats are saved as parquet sorted by term).
+  - the impact map (``impact_table`` / ``impact_fulltext``, the search
+    engine's fulltext mode): each document's weights as a
+    ``map<term, double>`` next to the corpus columns; a request is then one
+    scan, one filter and one top-k, with no join and no shuffle. The caveat:
+    a forward map makes a request O(corpus), and each map lookup is linear in
+    the document's distinct terms, where postings are O(postings of the
+    query terms). That is the right trade for short titles over thousands of
+    rows (the paper's 5.4k products); at hundreds of thousands of rows,
+    measure both.
 - No Python UDFs anywhere — the whole scorer is codegen'd expressions.
 """
 
@@ -63,16 +65,23 @@ B = 0.75
 
 @dataclass
 class TextStats:
-    """The 'full-text index': three DataFrames of corpus statistics."""
+    """The 'full-text index': the postings with their stored BM25 weights,
+    and the corpus statistics those weights were computed from."""
 
-    postings: DataFrame  # (id, term, tf)
+    postings: DataFrame  # (id, term, tf, w): w = the posting's BM25 weight
     doc_len: DataFrame  # (id, dl)
     doc_freq: DataFrame  # (term, df)
     corpus: DataFrame  # (n, avgdl) — single row
 
     def persist(self) -> "TextStats":
+        """The postings eagerly ``localCheckpoint``ed, which cuts their
+        lineage: a cached plan would keep the build's broadcast relations on
+        the heap. The three small relations are cached."""
         return TextStats(
-            self.postings.cache(), self.doc_len.cache(), self.doc_freq.cache(), self.corpus.cache()
+            self.postings.localCheckpoint(eager=True),
+            self.doc_len.cache(),
+            self.doc_freq.cache(),
+            self.corpus.cache(),
         )
 
     def save(self, path: str) -> None:
@@ -97,54 +106,48 @@ class TextStats:
 
 
 def build_text_stats(df: DataFrame, id_col: str, text_col: str) -> TextStats:
-    """Index build: tokenise once, derive postings + lengths + frequencies."""
+    """Index build: tokenise once, derive lengths + frequencies, and store
+    each posting's BM25 weight ``w``."""
     toks = df.select(
         F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("term")
     )
-    postings = toks.groupBy("id", "term").agg(F.count("*").cast("double").alias("tf"))
+    tf = toks.groupBy("id", "term").agg(F.count("*").cast("double").alias("tf"))
     doc_len = toks.groupBy("id").agg(F.count("*").cast("double").alias("dl"))
-    doc_freq = postings.groupBy("term").agg(F.count("*").cast("double").alias("df"))
+    doc_freq = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
     corpus = doc_len.agg(
         F.count("*").cast("double").alias("n"), F.avg("dl").alias("avgdl")
+    )
+    postings = (
+        tf.join(F.broadcast(doc_freq), "term")
+        .join(doc_len, "id")
+        .crossJoin(F.broadcast(corpus))
+        .select("id", "term", "tf", _weight().alias("w"))
     )
     return TextStats(postings, doc_len, doc_freq, corpus)
 
 
-def _weight(k1: float, b: float) -> Column:
+def _weight() -> Column:
     """One (doc, term) BM25 weight, idf(t)·tf·(k1+1)/(tf+norm(d)), over the
     columns ``n``, ``avgdl`` (corpus), ``df`` (term), ``dl`` (doc) and ``tf``."""
     idf = F.log(F.lit(1.0) + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tf_part = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
+    tf_part = (F.col("tf") * (K1 + 1.0)) / (
+        F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / F.col("avgdl"))
     )
     return idf * tf_part
 
 
-def bm25_scores(
-    stats: TextStats,
-    query_terms: list[str],
-    *,
-    k1: float = K1,
-    b: float = B,
-    round_dp: int | None = 6,
-) -> DataFrame:
-    """(id, score) for every document matching ≥1 query term.
+def bm25_scores(stats: TextStats, query_terms: list[str]) -> DataFrame:
+    """(id, score) for every document matching ≥1 query term: the sum of
+    its stored weights over the query terms, rounded to 6 dp.
 
     Per Lucene semantics, duplicate query terms contribute once (the query is
     a term *set*); unmatched documents are absent (score has no 0 rows).
     """
-    terms = sorted(set(query_terms))
-    qt = F.col("term").isin(terms)
-    scored = (
-        stats.postings.where(qt)
-        .join(F.broadcast(stats.doc_freq.where(qt)), "term")
-        .join(stats.doc_len, "id")
-        .crossJoin(F.broadcast(stats.corpus))
+    return (
+        stats.postings.where(F.col("term").isin(sorted(set(query_terms))))
         .groupBy("id")
-        .agg(F.sum(_weight(k1, b)).alias("_score"))
+        .agg(F.round(F.sum("w"), 6).alias("score"))
     )
-    out = F.col("_score") if round_dp is None else F.round(F.col("_score"), round_dp)
-    return scored.select("id", out.alias("score"))
 
 
 def fulltext(
@@ -156,7 +159,6 @@ def fulltext(
     text_col: str,
     stats: TextStats | None = None,
     residual_filter: Column | None = None,
-    round_dp: int | None = 6,
 ) -> DataFrame:
     """The reference's fulltext mode: score → residual $match → top-k.
 
@@ -166,8 +168,7 @@ def fulltext(
     """
     if stats is None:
         stats = build_text_stats(df, id_col, text_col)
-    q_terms = [t for t in _py_tokens(query)]
-    scores = bm25_scores(stats, q_terms, round_dp=round_dp).withColumnRenamed(
+    scores = bm25_scores(stats, _py_tokens(query)).withColumnRenamed(
         "id", "__bm25_id"  # corpus may legitimately have its own `id` column
     )
     out = df.join(scores, F.col(id_col) == F.col("__bm25_id"), "inner").drop("__bm25_id")
@@ -180,18 +181,15 @@ IMPACTS = "__impacts"  # impact_table's map<term, double> column
 
 
 def impact_table(df: DataFrame, stats: TextStats, id_col: str) -> DataFrame:
-    """``df`` with column ``IMPACTS``: each document's BM25 weight per term,
-    ``_weight(K1, B)`` exactly as ``bm25_scores`` computes it from ``stats``.
+    """``df`` with column ``IMPACTS``: each document's stored BM25 weight per
+    term, the same ``w`` that ``bm25_scores`` sums.
 
     The per-document maps are broadcast into ``df``, so the table keeps
     ``df``'s partitioning. Documents without a token are dropped: they match
     no query. ``df``'s ids must be unique."""
     impacts = (
-        stats.postings.join(F.broadcast(stats.doc_freq), "term")
-        .join(stats.doc_len, "id")
-        .crossJoin(F.broadcast(stats.corpus))
-        .groupBy(F.col("id").alias("__impact_id"))  # corpus may have its own `id`
-        .agg(F.map_from_entries(F.collect_list(F.struct("term", _weight(K1, B)))))
+        stats.postings.groupBy(F.col("id").alias("__impact_id"))  # corpus may have its own `id`
+        .agg(F.map_from_entries(F.collect_list(F.struct("term", "w"))))
         .toDF("__impact_id", IMPACTS)
     )
     return df.join(F.broadcast(impacts), F.col(id_col) == F.col("__impact_id")).drop(
@@ -232,8 +230,6 @@ def rm3_scores(
     fb_docs: int = 10,
     fb_terms: int = 8,
     orig_weight: float = 0.6,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """RM3 pseudo-relevance feedback (Lavrenko & Croft 2001 relevance models,
     the Anserini/Indri default expansion): retrieve top ``fb_docs`` by BM25,
@@ -255,10 +251,10 @@ def rm3_scores(
     """
     q_terms = sorted(set(query_terms))
     # base (pass-1 scores) feeds BOTH the feedback set and the final
-    # interpolation, and the mined term model is read by two joins in the
-    # expanded pass: left unmaterialized, each reference re-executes its
-    # whole filtered-postings join tree (measured 6.5 s -> 1.8 s at sf0.1
-    # from these two localCheckpoints alone). Both relations are small —
+    # interpolation, and the mined term model is read twice (its total and
+    # the expanded pass): left unmaterialized, each reference re-executes
+    # its whole plan (measured 6.5 s -> 1.8 s at sf0.1 from these two
+    # localCheckpoints alone, when the weights were still joined per query). Both relations are small —
     # |matched docs| rows and fb_terms rows — the classic materialize-the-
     # feedback-model step of any RM3 implementation (guide §3.3).
     # eager=False defers only each checkpoint's final stage to the first
@@ -266,14 +262,12 @@ def rm3_scores(
     # below it: every adaptive query stage (shuffle map stages and
     # broadcasts; the broadcasts also with AQE off). So this function
     # launches Spark jobs while it builds its DataFrame (statusTracker, at
-    # sf0.001): 4 for ``base`` and 3 for ``topt`` on a warm index, and 14
-    # for ``base`` when it also materialises a cold index.
-    base = bm25_scores(stats, q_terms, k1=k1, b=b, round_dp=6).localCheckpoint(
-        eager=False
-    )
+    # sf0.001): 1 for ``base`` and 3 for ``topt`` over persisted stats, and
+    # 10 for ``base`` when it also computes unpersisted ones.
+    base = bm25_scores(stats, q_terms).localCheckpoint(eager=False)
     fb = base.orderBy(F.desc("score"), F.asc("id")).limit(fb_docs)
     # --- term model from the feedback docs (original terms excluded)
-    w = (
+    mined = (
         stats.postings.join(F.broadcast(fb), "id")
         .join(stats.doc_len, "id")
         .where(~F.col("term").isin(q_terms))
@@ -286,7 +280,7 @@ def rm3_scores(
         .groupBy("term")
         .agg(F.sum("c").alias("wdec"))
     )
-    topt = w.orderBy(F.desc(F.col("wdec").cast("double")), F.asc("term")).limit(
+    topt = mined.orderBy(F.desc(F.col("wdec").cast("double")), F.asc("term")).limit(
         fb_terms
     ).localCheckpoint(eager=False)
     tot = topt.agg(F.sum("wdec").alias("t"))
@@ -294,17 +288,12 @@ def rm3_scores(
         "term",
         (F.col("wdec").cast("double") / F.col("t").cast("double")).alias("what"),
     )
-    # --- expanded pass: ŵ_t · per-term BM25 over the full postings
+    # --- expanded pass: ŵ_t · stored per-term BM25 weight over the postings
     exp_scores = (
         stats.postings.join(F.broadcast(what), "term")
-        .join(F.broadcast(stats.doc_freq.join(what.select("term"), "term")), "term")
-        .join(stats.doc_len, "id")
-        .crossJoin(F.broadcast(stats.corpus))
         .select(
             "id",
-            F.round(F.col("what") * _weight(k1, b), 9)
-            .cast("decimal(18,9)")
-            .alias("e"),
+            F.round(F.col("what") * F.col("w"), 9).cast("decimal(18,9)").alias("e"),
         )
         .groupBy("id")
         .agg(F.sum("e").alias("edec"))

@@ -131,6 +131,24 @@ def test_release_unpersists_nested_dataframes(spark):
     assert all(not df.is_cached for df in dfs)
 
 
+def test_release_frees_a_checkpointed_entry(registry, spark, tmp_path):
+    """``unpersist`` leaves a localCheckpoint's blocks in place: a replaced
+    entry that holds a checkpoint must free its RDD too."""
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    os.mkdir(a)
+    os.mkdir(b)
+    held = registry.get(spark, "ckpt", a, lambda: spark.range(1000).localCheckpoint(eager=True))
+    rdd_id = held._jdf.queryExecution().analyzed().rdd().id()
+
+    def stored():
+        return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    assert rdd_id in stored()
+    registry.get(spark, "ckpt", b, lambda: spark.range(3).cache())
+    assert rdd_id not in stored()
+    registry.release(registry._entries.pop("ckpt").value)
+
+
 # One query per artifact family: BM25 index, ANN corpus/layout/report, graph
 # index, profile aggregate + materialized report, memo, staged stream source,
 # staged export, materialized components, BPE training, media fingerprints.

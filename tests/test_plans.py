@@ -105,13 +105,51 @@ def test_dimension_joins_broadcast(spark):
 
 
 def test_bm25_stats_joins_broadcast(spark):
-    from hybrid_vector_search_spark.operators.bm25 import build_text_stats, bm25_scores
+    """The index build joins each posting to its term's df and the corpus
+    statistics through broadcasts, to store the posting's weight."""
+    from hybrid_vector_search_spark.operators.bm25 import build_text_stats
     from hybrid_vector_search_spark.sources import load_table
 
     docs = load_table(spark, SF_SMALL, "documents")
-    stats = build_text_stats(docs, "doc_id", "text")
-    plan = _plan(bm25_scores(stats, ["spark", "fast"]))
+    plan = _plan(build_text_stats(docs, "doc_id", "text").postings)
     assert "BroadcastHashJoin" in plan, plan
+
+
+def test_bm25_scores_over_persisted_stats_has_no_join(spark):
+    """Scoring sums the weights stored at build: over persisted stats it is
+    a filter and an aggregate, with no join and nothing broadcast."""
+    from hybrid_vector_search_spark.operators.bm25 import bm25_scores, build_text_stats
+    from hybrid_vector_search_spark.sources import load_table
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    stats = build_text_stats(docs, "doc_id", "text").persist()
+    plan = _plan(bm25_scores(stats, ["spark", "fast"]))
+    assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+    assert "HashAggregate" in plan, plan
+
+
+def test_engine_hybrid_request_jobs(spark):
+    """One engine hybrid request launches 5 Spark jobs on this corpus. When
+    the text branch still joined the postings to the corpus statistics per
+    request, it launched 8 (and 101 tasks, against 5 now)."""
+    from hybrid_vector_search_spark.api import SearchConfig, SearchEngine
+    from hybrid_vector_search_spark.operators.embed import embed_documents
+    from hybrid_vector_search_spark.sources import load_table
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    eng = SearchEngine(
+        embed_documents(docs, "text", "emb"),
+        SearchConfig(id_col="doc_id", title_col="text", emb_col="emb", price_col="n_chars"),
+    )
+    payload = {"mode": "hybrid", "description": "spark fast", "title": "spark fast table"}
+    sc, group = spark.sparkContext, "test-engine-hybrid-request-jobs"
+    sc.setJobGroup(group, "one hybrid request")
+    try:
+        res = eng.search(payload)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(res["results"]) == 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
 
 
 def test_pricing_summary_partial_agg(spark):

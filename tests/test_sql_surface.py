@@ -44,6 +44,17 @@ def test_sql_views_queryable(spark):
         )
     )
     assert op == via_sql
+    # the same scores from the weights the index build stored
+    stored = sorted(
+        map(
+            tuple,
+            spark.sql(
+                "SELECT id, round(sum(w), 6) AS score FROM ft_postings"
+                " WHERE term = 'spark' GROUP BY id"
+            ).collect(),
+        )
+    )
+    assert stored == op == via_sql
 
     splits = spark.sql("SELECT DISTINCT split FROM doc_splits ORDER BY split").collect()
     assert [r.split for r in splits] == ["test", "train", "val"]
