@@ -23,11 +23,20 @@ exactly:
 The engine is storage-agnostic: a SearchConfig names which columns play the
 roles of id/title/embedding/filter fields, so the same facade serves the
 reference's product_detail schema or any corpus with an embedding column.
+
+Like the reference's index build (indexes.py:54-86), the engine builds its
+serving state once and every request reads it: the text index (postings with
+their BM25 weights), a fulltext table of per-document term weights, and a
+vector table of the corpus columns the vector path reads with each row's
+vector norm, spread over the cores. A request is then one scan, with no
+join, of the table its mode reads.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
+import threading
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -43,16 +52,8 @@ from .operators.knn import clamp_limit, knn
 
 MODES = {"vector", "hybrid", "fulltext"}
 COMPAT_MODES = {"native", "atlas"}
-# columns of the engine's vector norm index (see SearchEngine._build_norms)
-_NORM_ID, _NORM_KEY, _NORM = "__norm_id", "__norm_key", "__norm"
-
-
-def _id_key(id_col: Column) -> Column:
-    """The norm index's join key: a 64-bit hash of the id. On a long key
-    Spark broadcasts a compact hash map (about 1.5 MB per request for the
-    paper's 5.4k products); on a string key it broadcasts a byte map whose
-    first memory page alone is 16 MB."""
-    return F.xxhash64(id_col)
+# the vector table's per-row norm column (see SearchEngine._build_vector_table)
+_NORM = "__norm"
 
 
 # reference backend/api.py:210-214 names its two fusion sub-pipelines
@@ -146,33 +147,54 @@ class SearchEngine:
         eager: bool = True,
     ):
         """``eager=True`` (default, the serving trade): build the indexes at
-        construction — persist the text index (postings with their BM25
-        weights), the per-row vector norms and the fulltext impact table,
-        check that ids are unique, and read the corpus vector dimensionality
-        — so a bad corpus fails at startup, not on the first query.
-        ``eager=False`` defers each of these to its first use, for batch
-        composition where an engine may be constructed (e.g. per table in a
-        catalog sweep) without ever serving a query."""
+        construction — check that ids are unique, persist the text index
+        (postings with their BM25 weights), checkpoint the vector table (the
+        corpus columns the vector path reads, with each row's vector norm,
+        spread over the cores) and the fulltext impact table, and read the
+        corpus vector dimensionality — so a bad corpus fails at startup, not
+        on the first query. ``eager=False`` defers each of these to its
+        first use, for batch composition where an engine may be constructed
+        (e.g. per table in a catalog sweep) without ever serving a query."""
         if compat not in COMPAT_MODES:
             raise ValueError(f"compat must be one of {sorted(COMPAT_MODES)}, got {compat!r}")
         self.df = df
         self.cfg = config
         self.compat = compat
         self.embedder = embedder or HashingEmbedder()
+        self._ids_checked = False
         self._stats_cache = None
-        self._norm_corpus: DataFrame | None = None
+        self._vector_table: DataFrame | None = None
+        self._vector_parts = 1
         self._text_table: DataFrame | None = None
         self._dim_cache: int | None = None
         self._dim_known = False
+        # endpoint calls whose Spark work is running now (_serving); a kNN
+        # scan splits the cores among them (_knn)
+        self._in_flight = 0
+        self._in_flight_lock = threading.Lock()
         if eager:
-            self._build_norms()
+            self._build_vector_table()
             self._build_stats()
             self._build_text_table()
             self._read_dim()
 
+    def _check_ids(self) -> None:
+        """Fail unless the corpus ids are unique. BM25 groups postings by id,
+        and the text table and hybrid fusion join on it, so duplicates would
+        mix documents' scores silently. Runs once, before the first build."""
+        if not self._ids_checked:
+            ids = self.df.groupBy(F.col(self.cfg.id_col).alias("__id")).count()
+            dups = ids.where(F.col("count") > 1).limit(3).collect()
+            if dups:
+                raise ValueError(
+                    f"corpus ids must be unique: {self.cfg.id_col} repeats for "
+                    f"{[r['__id'] for r in dups]}"
+                )
+            self._ids_checked = True
+
     def _build_stats(self):
         if self._stats_cache is None:
-            self._build_norms()  # BM25 needs unique ids; this checks them
+            self._check_ids()
             # "index build": corpus-global text statistics over the FULL
             # table, and from them each posting's BM25 weight, computed once
             # and summed by every hybrid query with no join (reference
@@ -199,39 +221,28 @@ class SearchEngine:
             self._text_table = table.localCheckpoint(eager=True)
         return self._text_table
 
-    def _build_norms(self) -> DataFrame:
-        """The corpus with each row's ``norm(embedding)`` in column ``_NORM``,
-        read from the persisted norm index through a broadcast join. The
-        DataFrame is a lazy plan built once and reused by every search."""
-        if self._norm_corpus is None:
-            # "vector index build": each row's norm(embedding), keyed by id,
-            # computed once so that a cosine search makes one pass per row
-            # (the dot product) instead of two. The duplicate-id check runs
-            # over it and materialises it in the same job.
-            id_col = F.col(self.cfg.id_col)
-            norms = self.df.select(
-                id_col.alias(_NORM_ID),
-                _id_key(id_col).alias(_NORM_KEY),
-                norm(F.col(self.cfg.emb_col)).alias(_NORM),
-            ).persist()
-            dups = norms.groupBy(_NORM_ID).count().where(F.col("count") > 1).limit(3).collect()
-            if dups:
-                norms.unpersist()
-                # BM25 groups postings by id and the norm join matches by id,
-                # so duplicates would mix documents' scores silently
-                raise ValueError(
-                    f"corpus ids must be unique: {self.cfg.id_col} repeats for "
-                    f"{[r[_NORM_ID] for r in dups]}"
-                )
-            self._norm_corpus = (
-                self.df.join(F.broadcast(norms), _id_key(id_col) == F.col(_NORM_KEY))
-                # a norm belongs to the row only if the ids match as well: where
-                # two ids' hashes collide, the mismatched pairs get a NULL norm,
-                # and knn drops them
-                .withColumn(_NORM, F.when(id_col == F.col(_NORM_ID), F.col(_NORM)))
-                .drop(_NORM_ID, _NORM_KEY)
+    def _build_vector_table(self) -> DataFrame:
+        """The vector serving table: the corpus columns a vector request
+        reads (the projected ones, the root column of each filter field and
+        the embedding) plus each row's ``norm(embedding)`` in column
+        ``_NORM``, spread over ``defaultParallelism`` partitions, so that a
+        kNN request is one scan with no join, in as many tasks as the load
+        leaves cores for (_knn)."""
+        if self._vector_table is None:
+            self._check_ids()
+            cfg, columns = self.cfg, self.df.columns
+            filters = (cfg.available_col, cfg.price_col, cfg.restaurant_col)
+            roots = [c if c in columns else c.split(".")[0] for c in filters if c]
+            read = dict.fromkeys([*self._project_cols(), *roots, cfg.emb_col])
+            # "vector index build": each row's norm, computed once so that a
+            # cosine search makes one pass per row (the dot product), not two
+            table = self.df.select(*read, norm(F.col(cfg.emb_col)).alias(_NORM)).repartition(
+                self.df.sparkSession.sparkContext.defaultParallelism
             )
-        return self._norm_corpus
+            # checkpointed, not persisted, for the reason _build_text_table gives
+            self._vector_table = table.localCheckpoint(eager=True)
+            self._vector_parts = self._vector_table.rdd.getNumPartitions()
+        return self._vector_table
 
     def _read_dim(self) -> int | None:
         if not self._dim_known:
@@ -253,6 +264,17 @@ class SearchEngine:
 
     # ---------------------------------------------------------- endpoints
 
+    @contextlib.contextmanager
+    def _serving(self):
+        """Count the enclosed Spark work as one endpoint call in flight."""
+        with self._in_flight_lock:
+            self._in_flight += 1
+        try:
+            yield
+        finally:
+            with self._in_flight_lock:
+                self._in_flight -= 1
+
     def restaurants(self) -> list[str]:
         """GET /api/restaurants: distinct non-null values, ascending
         (reference backend/api.py:84-95)."""
@@ -263,7 +285,7 @@ class SearchEngine:
             "Executing restaurants aggregation: distinct(%s) not-null asc",
             self.cfg.restaurant_col,
         )
-        with timed(_LOG, "restaurants"):
+        with self._serving(), timed(_LOG, "restaurants"):
             rows = (
                 self.df.select(F.col(self.cfg.restaurant_col).alias("v"))
                 .where(F.col("v").isNotNull())
@@ -323,7 +345,7 @@ class SearchEngine:
             "Executing %s pipeline: limit=%d available=%s maxPrice=%s restaurant=%s",
             mode, limit, available, max_price, restaurant,
         )
-        with timed(_LOG, f"search[{mode}]"):
+        with self._serving(), timed(_LOG, f"search[{mode}]"):
             if mode == "vector":
                 out = self._vector(description, limit, pre_filter)
             elif mode == "hybrid":
@@ -359,14 +381,25 @@ class SearchEngine:
         return cols
 
     def _knn(self, description: str, limit: int, pre_filter: Column | None) -> DataFrame:
-        """Exact top-``limit`` corpus rows for the embedded description.
-        Cosine reads each row's norm from the norm index."""
+        """Exact top-``limit`` rows of the vector table for the embedded
+        description. Cosine reads each row's stored norm.
+
+        A lone request scans the table in one task per partition. Under
+        load, the partitions are coalesced (narrow, no shuffle) so that the
+        requests in flight share the cores: at as many requests as
+        partitions, each scans in one task, so a one-task fulltext job does
+        not queue behind one request's many tasks. Answers do not depend on
+        the split: the top-k order (score DESC, id ASC) is total."""
         qv = query_vector(description, embedder=self.embedder)
-        corpus, norm_col = self.df, None
+        norm_col = None
         if self.cfg.metric == "cosine":
             if norm_value(qv) == 0.0:
                 raise ApiError(400, "La descripción no contiene términos con los que buscar.")
-            corpus, norm_col = self._build_norms(), _NORM
+            norm_col = _NORM
+        corpus, parts = self._build_vector_table(), self._vector_parts
+        tasks = max(1, parts // max(1, self._in_flight))
+        if tasks < parts:
+            corpus = corpus.coalesce(tasks)
         return knn(
             corpus,
             qv,
@@ -443,8 +476,9 @@ class SearchEngine:
         pre = None
         for c in conds:
             pre = c if pre is None else pre & c
-        out = self._vector(query, clamp_limit(k), pre)
-        return [self._sanitize(r.asDict(True)) for r in out.collect()]
+        with self._serving():
+            out = self._vector(query, clamp_limit(k), pre)
+            return [self._sanitize(r.asDict(True)) for r in out.collect()]
 
     def _sanitize(self, doc: dict[str, Any], *, compat: str = "native") -> dict[str, Any]:
         """Reference sanitize_result (backend/api.py:53-81): stringify ids,

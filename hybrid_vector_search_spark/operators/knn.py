@@ -15,6 +15,9 @@ Physical plan notes (what Catalyst produces and why it scales):
 - ``orderBy(...).limit(k)`` → ``TakeOrderedAndProject``: per-partition top-k
   heaps + single driver merge of k·num_partitions rows. No global sort, no
   shuffle of the corpus — this is the property that survives a 100× scale-up.
+  The heaps run as parallel tasks, one per partition of ``df``; the
+  serving engine (``api.SearchEngine._knn``) chooses how many by coalescing
+  its vector table to the cores the requests in flight leave free.
 - The score is an interpreted projection: higher-order functions
   (zip_with/aggregate) fall back from whole-stage codegen, so each lambda
   runs once per vector element. Nothing crosses into Python. Per row, a

@@ -217,6 +217,35 @@ def test_restaurants_endpoint(engine):
     assert vals == sorted(vals) and "src0" in vals
 
 
+def test_in_flight_count_survives_thread_switches(engine):
+    """The engine's count of calls in flight, which sets how many tasks a
+    kNN scan uses, loses no update when many threads enter and leave at
+    once."""
+    import sys
+    import threading
+
+    seen: list[int] = []
+
+    def enter_and_leave():
+        for _ in range(2000):
+            with engine._serving():
+                seen.append(engine._in_flight)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=enter_and_leave) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert engine._in_flight == 0
+    assert len(seen) == 16 * 2000 and 1 <= min(seen) and max(seen) <= 16
+
+
 def test_dim_mismatch_fails_loudly(engine, spark):
     """A wrong-dimension query vector raises instead of silently returning
     NULL scores (zip_with null-pads otherwise)."""
@@ -263,9 +292,8 @@ def test_zero_norm_corpus_rows_never_returned(spark):
     assert blank and blank[0]["score_details"]["vector"]["raw"] is None
 
 
-def test_norm_index_key_collisions_keep_each_rows_norm(spark, monkeypatch):
-    """The norm index joins on a hash of the id; rows whose hashes collide
-    must still be scored with their own norm."""
+def test_each_row_scored_with_its_own_norm(spark):
+    """Each row's cosine score divides by that row's own stored norm."""
     from hybrid_vector_search_spark import api
 
     class Fixed:  # a query embedding that is the same for every text
@@ -277,11 +305,8 @@ def test_norm_index_key_collisions_keep_each_rows_norm(spark, monkeypatch):
         "_id long, title string, emb_description array<float>",
     )
     payload = {"mode": "vector", "description": "anything", "limit": 25}
-    expected = api.SearchEngine(corpus, api.SearchConfig(), embedder=Fixed()).search(payload)
-    assert [r["score"] for r in expected["results"]] == [0.991935, 0.9, 0.8]
-    monkeypatch.setattr(api, "_id_key", lambda c: F.lit(0).cast("long"))
-    collided = api.SearchEngine(corpus, api.SearchConfig(), embedder=Fixed()).search(payload)
-    assert collided == expected
+    res = api.SearchEngine(corpus, api.SearchConfig(), embedder=Fixed()).search(payload)
+    assert [r["score"] for r in res["results"]] == [0.991935, 0.9, 0.8]
 
 
 def test_duplicate_ids_rejected_at_build(spark):
@@ -298,6 +323,27 @@ def test_duplicate_ids_rejected_at_build(spark):
         lazy = SearchEngine(corpus, SearchConfig(), embedder=embedder, eager=False)
         with pytest.raises(ValueError, match="unique"):
             lazy.search(payload)
+
+
+def test_lazy_fulltext_engine_builds_no_vector_table(spark):
+    """A lazy engine that serves only fulltext checks its ids and builds its
+    text index, but leaves the vector table unbuilt: its checkpoint is made
+    by the first vector request."""
+    from hybrid_vector_search_spark.api import SearchConfig, SearchEngine
+
+    def stored():
+        return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    corpus, embedder = _tiny_corpus(
+        spark, [(1, "red apple", "red apple"), (2, "green pear", "green pear")]
+    )
+    lazy = SearchEngine(corpus, SearchConfig(), embedder=embedder, eager=False)
+    assert lazy.search({"mode": "fulltext", "title": "red pear"})["results"]
+    after_fulltext = stored()
+    assert lazy._vector_table is None
+    assert lazy.search({"description": "red pear"})["results"]
+    table_rdd = lazy._vector_table._jdf.queryExecution().analyzed().rdd().id()
+    assert table_rdd in stored() and table_rdd not in after_fulltext
 
 
 def _assert_fulltext_parity(eng, corpus, title, extra, ref_filter):

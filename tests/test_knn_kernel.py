@@ -1,10 +1,12 @@
 """Exact kNN kernel: ``(id, score)`` lists must equal a NumPy reference that
 sums left to right in float64, as Spark's ``aggregate`` does, for every
 metric, with and without a precomputed norm column and a pre-filter. Also
-the zero-vector rule of cosine search."""
+the zero-vector rule of cosine search, and the engine's answers whatever
+number of tasks scans its vector table."""
 
 from __future__ import annotations
 
+import contextlib
 import math
 from decimal import ROUND_HALF_UP, Decimal
 
@@ -132,3 +134,83 @@ def test_norm_value_matches_spark_norm(spark):
     v = [float(x) for x in rng.standard_normal(1024)]
     df = spark.createDataFrame([(v,)], "v array<double>")
     assert df.select(norm(F.col("v"))).head()[0] == norm_value(v)
+
+
+class _FixedEmbedder:
+    """Embeds every text as the same query vector."""
+
+    def __init__(self, vector):
+        self.vector = vector
+
+    def embed_one(self, text):
+        return self.vector
+
+
+def _tasks(sc, group: str) -> int:
+    """Tasks run by the jobs of a job group."""
+    tracker, n = sc.statusTracker(), 0
+    for jid in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(jid).stageIds:
+            stage = tracker.getStageInfo(sid)
+            n += stage.numCompletedTasks if stage is not None else 0
+    return n
+
+
+@pytest.mark.parametrize("in_parts", [1, 3])
+def test_engine_answers_do_not_depend_on_the_split(spark, in_parts):
+    """A lone request scans the engine's vector table in one task per
+    partition; with as many requests as partitions in flight, it scans the
+    table coalesced into one task. On a corpus of repeated vectors, whose
+    rounded scores tie, vector and hybrid answers are the same either way,
+    and vector answers equal the left-to-right reference (score DESC, id
+    ASC), whatever partitioning the corpus came in."""
+    from hybrid_vector_search_spark.api import SearchConfig, SearchEngine
+
+    rng = np.random.default_rng(5)
+    pool = rng.integers(-3, 4, size=(6, 8)).astype(np.float32)
+    ids = rng.permutation(90) + 1
+    mat, price = pool[ids % 6], (ids % 7).astype(float)
+    titles = ["red apple", "green pear", "red pear", "ripe apple"]
+    corpus = spark.createDataFrame(
+        [(int(i), titles[i % 4], [float(x) for x in v], float(p))
+         for i, v, p in zip(ids, mat, price)],
+        "_id long, title string, emb_description array<float>, price double",
+    ).repartition(in_parts)
+    q = [float(x) for x in rng.standard_normal(8)]
+    eng = SearchEngine(corpus, SearchConfig(price_col="price"), embedder=_FixedEmbedder(q))
+    sc, parts = spark.sparkContext, eng._vector_parts
+    assert parts == sc.defaultParallelism
+
+    vector = {"mode": "vector", "description": "any", "limit": K}
+    hybrid = {**vector, "mode": "hybrid", "title": "red apple"}
+    payloads = [vector, {**vector, "maxPrice": 4}, hybrid, {**hybrid, "maxPrice": 4}]
+
+    def serve(case: str):
+        """Each payload's results, and the tasks of the unfiltered vector
+        request."""
+        out, tasks = [], None
+        for i, payload in enumerate(payloads):
+            group = f"test-split-{in_parts}-{case}-{i}"
+            sc.setJobGroup(group, case)
+            try:
+                out.append(eng.search(payload)["results"])
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            tasks = _tasks(sc, group) if i == 0 else tasks
+        return out, tasks
+
+    lone, lone_tasks = serve("lone")
+    with contextlib.ExitStack() as load:
+        load.enter_context(eng._serving())
+        two, two_tasks = serve("two")
+        for _ in range(parts - 1):
+            load.enter_context(eng._serving())
+        plan = eng._vector("any", K, None)._jdf.queryExecution().executedPlan().toString()
+        assert ("Coalesce 1" in plan) == (parts > 1), plan
+        loaded, loaded_tasks = serve("loaded")
+    assert (lone_tasks, two_tasks, loaded_tasks) == (parts, max(1, parts // 2), 1)
+    assert eng._in_flight == 0
+    assert two == lone and loaded == lone
+    for results, keep in ((lone[0], np.ones(len(ids), bool)), (lone[1], price < 4)):
+        got = [(int(r["_id"]), r["score"]) for r in results]
+        assert got == _reference(ids, mat, q, "cosine", keep)
